@@ -31,7 +31,9 @@ SF_DEFAULT = "/root/testdata/sf0.001"
 # scan plan only — never data or results; every execution still scans
 # the parquet inputs (the per-session file-listing cache the guide §6
 # recommends, and what a production session gets from registering the
-# tables once).
+# tables once).  It assumes the sf dirs are static: a handle is never
+# refreshed, so rewriting a table's files mid-session leaves its
+# handle on the old file listing and schema.
 _TABLES: dict[tuple[str, str, str], DataFrame] = {}
 
 
@@ -54,14 +56,15 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _par(spark: SparkSession, df: DataFrame, key: str = "doc_id"
          ) -> DataFrame:
     """Spread rows across the session's task slots before a per-row-
-    heavy kernel.  The small bench parquet tables are one file with one
-    row group — one scan task — so without this every map-heavy stage
-    (n-gram explodes, pandas-UDF kernels, quantized dot products)
-    serializes on a single core (measured r7: doc_categories 2.08 s /
-    dsir passes 7-8 s, each in a 1-task stage).  Real corpora bring
-    many splits; this hash repartition stands in for them at bench
-    scale — the same rationale bloom_contamination_stats documents.
-    Results are partitioning-independent, so values are unchanged."""
+    heavy kernel — the one place query paths choose an input layout.
+    The small bench parquet tables are one file with one row group —
+    one scan task — and seeded corpora are one local relation, so
+    without this every map-heavy stage (n-gram explodes, pandas-UDF
+    kernels, quantized dot products) serializes on a single core
+    (measured r7: doc_categories 2.08 s / dsir passes 7-8 s, each in a
+    1-task stage).  Real corpora bring many splits; this hash
+    repartition stands in for them at bench scale.  Results are
+    partitioning-independent, so values are unchanged."""
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(n, key)
 
@@ -80,7 +83,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     pages = spark.createDataFrame(corpus.corpus_pdf(200),
                                   schema=INPUT_SCHEMA)
-    results = run_extraction(pages.repartition(8, F.xxhash64("url")))
+    results = run_extraction(_par(spark, pages, "url"))
     return (
         results.groupBy("status", "category")
         .agg(F.count("*").alias("n_docs"),
@@ -1283,7 +1286,7 @@ def corpus_extract_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pages = spark.createDataFrame(corpus.corpus_pdf(300),
                                   schema=INPUT_SCHEMA)
-    res = run_extraction(pages.repartition(8, F.xxhash64("url")))
+    res = run_extraction(_par(spark, pages, "url"))
     return (res.groupBy("status", "source", "category")
                .agg(F.count("*").alias("n_docs")))
 
@@ -2938,12 +2941,9 @@ def bloom_contamination_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         bloom_contamination)
 
     # the screen is shuffle-free until its final groupBy, so its
-    # parallelism is the INPUT partitioning; a single small parquet
-    # file would serialize the whole shingle+md5 pass on one core
-    # (real corpora bring many splits — this repartition stands in
-    # for them at bench scale)
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text") \
-        .repartition(32, "doc_id")
+    # parallelism is the INPUT partitioning
+    docs = _par(spark, _t(spark, sf_dir, "documents")
+                .select("doc_id", "text"))
     bench = docs.where(F.col("doc_id") % 83 == 0).select("text")
     return bloom_contamination(docs, bench, "doc_id", "text",
                                n=13, hex_chars=5, k=2) \
@@ -3913,12 +3913,6 @@ def stream_batch_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docvault_ocr_service_spark.streaming.stream import (
         stream_extract_merge)
 
-    # tiny fixture through many MERGE stages: a 200-partition default
-    # shuffle would add pure scheduler overhead — pin low for THIS
-    # query and restore after (unlike _t's UTC pin this is a perf
-    # tweak, not a semantic requirement for the whole session)
-    prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 40)
     inp = docs.select(
         F.concat(F.lit("https://corpus.local/"), F.col("doc_id"))
@@ -3967,10 +3961,6 @@ def stream_batch_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
                .first())
     finally:
         shutil.rmtree(work, ignore_errors=True)
-        if prior_shuffle is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
     out_schema = T.StructType([
         T.StructField("n_urls", T.LongType()),
         T.StructField("status_match", T.LongType()),

@@ -166,8 +166,7 @@ def _fresh_session(cores: int):
         active.stop()
     from docvault_ocr_service_spark.session import get_spark
 
-    return get_spark(app_name=f"bench_{cores}", cores=cores,
-                     shuffle_partitions=max(cores, 8))
+    return get_spark(app_name=f"bench_{cores}", cores=cores)
 
 
 def materialize_bench_corpus(spark, n_rows: int, path: str) -> None:

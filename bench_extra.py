@@ -8,14 +8,15 @@ Modes:
                                         # bench.py's run_headline)
   python bench_extra.py --query NAME [NAME ...]
                                         # isolated: fresh session, warm
-                                        # pass, median-of-5 per query
+                                        # pass, median-of-5 per query,
+                                        # each run written to the noop
+                                        # sink (computes every column)
   python bench_extra.py --explain NAME [NAME ...]
                                         # write .explain("formatted")
                                         # for the query to stdout
-  python bench_extra.py --noop NAME     # time with the noop sink
-                                        # (computes every column)
 
-All modes print one JSON line at the end.
+A mode flag with no query names exits non-zero.  All modes print one
+JSON line at the end.
 """
 
 from __future__ import annotations
@@ -54,6 +55,12 @@ def headline_full() -> None:
     }))
 
 
+def _run_noop(df) -> None:
+    # the noop sink computes every column; .count() would let Catalyst
+    # prune the projection down to whatever the row count needs
+    df.write.format("noop").mode("overwrite").save()
+
+
 def isolated(names: list[str], reps: int = 5) -> None:
     import __spark_entry__ as entrymod
 
@@ -63,11 +70,11 @@ def isolated(names: list[str], reps: int = 5) -> None:
         _warm(spark)
         qs = entrymod.queries()
         spark.sparkContext.setJobDescription(f"isolated:{name}")
-        qs[name](spark, SF_DIR).count()  # warm pass
+        _run_noop(qs[name](spark, SF_DIR))  # warm pass
         samples = []
         for _ in range(reps):
             t0 = time.monotonic()
-            qs[name](spark, SF_DIR).count()
+            _run_noop(qs[name](spark, SF_DIR))
             samples.append(round(time.monotonic() - t0, 3))
         spark.stop()
         out[name] = {"median": sorted(samples)[len(samples) // 2],
@@ -90,34 +97,14 @@ def explain(names: list[str]) -> None:
     print(json.dumps({"mode": "explain", "queries": names}))
 
 
-def noop(names: list[str], reps: int = 3) -> None:
-    import __spark_entry__ as entrymod
-
-    out: dict[str, dict] = {}
-    spark = benchmod._fresh_session(CPUS)
-    _warm(spark)
-    qs = entrymod.queries()
-    for name in names:
-        df = qs[name](spark, SF_DIR)
-        df.write.format("noop").mode("overwrite").save()  # warm
-        samples = []
-        for _ in range(reps):
-            t0 = time.monotonic()
-            qs[name](spark, SF_DIR).write.format("noop") \
-                .mode("overwrite").save()
-            samples.append(round(time.monotonic() - t0, 3))
-        out[name] = {"median": sorted(samples)[len(samples) // 2],
-                     "samples": samples}
-    spark.stop()
-    print(json.dumps({"mode": "noop", "queries": out}))
-
-
 if __name__ == "__main__":
-    if len(sys.argv) > 2 and sys.argv[1] == "--query":
-        isolated(sys.argv[2:])
-    elif len(sys.argv) > 2 and sys.argv[1] == "--explain":
-        explain(sys.argv[2:])
-    elif len(sys.argv) > 2 and sys.argv[1] == "--noop":
-        noop(sys.argv[2:])
+    modes = {"--query": isolated, "--explain": explain}
+    if len(sys.argv) > 1 and sys.argv[1] in modes:
+        if len(sys.argv) == 2:
+            sys.exit(f"{sys.argv[1]} needs at least one query name")
+        modes[sys.argv[1]](sys.argv[2:])
+    elif len(sys.argv) > 1:
+        sys.exit(f"unknown argument {sys.argv[1]!r}; modes: "
+                 f"{', '.join(modes)} or none for the headline run")
     else:
         headline_full()

@@ -52,11 +52,12 @@ def train_char_trigram_lm(docs: DataFrame, text_col: str = "text"
         .where(F.length("t") >= 3)
     tri = _explode_positions(norm, "t", 3) \
         .select(F.expr("substring(t, __i, 3)").alias("g3"))
-    # materialize the trigram table eagerly: it is charset³-bounded by
-    # contract, and every broadcast that consumes it (the g3 join, the
-    # g2 join whose build derives from it — twice each when a caller
-    # branches on the scored frame) would otherwise re-run the whole
-    # training explode per build
+    # checkpoint lazily; the first consumer materializes it: the
+    # trigram table is charset³-bounded by contract, and every
+    # broadcast that consumes it (the g3 join, the g2 join whose build
+    # derives from it — twice each when a caller branches on the
+    # scored frame) would otherwise re-run the whole training explode
+    # per build
     c3 = (tri.groupBy("g3").agg(F.count("*").alias("c3"))
           .localCheckpoint(eager=False))
     c2 = (c3.groupBy(F.substring("g3", 1, 2).alias("g2"))

@@ -46,33 +46,13 @@ surface this engine adds (SURVEY §2 "beyond the reference").
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from docvault_ocr_service_spark.functions.dsir import hashed_features
+from docvault_ocr_service_spark.operators import tuning
 
-
-@contextmanager
-def _training_shuffles(spark, k_parts: int):
-    """Scope the GD loop's shuffle layout: partitions already derived
-    from the seed-set size, AQE off so each per-iteration collect is
-    ONE job instead of a cascade of stage-materialization jobs (~35 ms
-    of driver latency each on this box).  Safe here in a way it is not
-    in general: every cross-row sum in the loop is an exact scaled
-    integer, so partition layout cannot perturb results.  Both knobs
-    restored on exit."""
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", str(k_parts))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
 
 W_SCALE = 1_000_000_000      # weight resolution (1e-9)
 R_SCALE = 1_000_000          # residual resolution (1e-6)
@@ -152,33 +132,34 @@ def train_quality_classifier(labeled: DataFrame, id_col: str,
             f"labeled SEED SET; score the corpus with "
             f"score_quality instead, or raise max_train_rows "
             f"explicitly if a larger seed set is intended")
-    spark_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    k_parts = max(1, min(spark_parts, n_docs // 4000))
-    # (id, label, bucket, cnt) — occurrences pre-aggregated per doc
-    # ONCE (the margin and gradient sums are linear in the occurrence
-    # count, so Σ_occurrences w ≡ Σ_buckets cnt·w exactly), PLUS one
-    # __bias__ row per doc with cnt=1: the bias then rides the same
-    # join/sum/update arithmetic as every other bucket (margin picks
-    # up bias_q·1, the bucket gradient at __bias__ IS the bias
-    # gradient), which folds the former separate per-iteration bias
-    # aggregation + collect into the one gradient collect.  The label
-    # rides along as a grouping key so no per-iteration docs join is
-    # needed, and the table is hash-partitioned by doc id so the
-    # per-iteration margin aggregation needs no exchange.  Net shape
-    # per iteration: broadcast the weight table, map-side margin agg,
-    # one bucket-space-bounded exchange, ONE collect.
-    pairs = (_occurrences(labeled, id_col, text_col, hex_chars)
-             .groupBy("__id", "bucket")
-             .agg(F.count("*").alias("__cnt"))
-             .unionByName(docs.select(
-                 "__id", F.lit(BIAS_BUCKET).alias("bucket"),
-                 F.lit(1).cast("long").alias("__cnt")))
-             .join(docs, "__id")
-             .repartition(k_parts, "__id")
-             .persist())
-    try:
-        weights: dict[str, int] = {BIAS_BUCKET: 0}   # bucket -> w_q
-        with _training_shuffles(spark, k_parts):
+    # every cross-row sum in the loop is an exact scaled integer, so
+    # the loop layout (operators/tuning.py) cannot perturb results
+    with tuning.iteration_shuffles(spark, n_docs,
+                                   rows_per_partition=4000) as k_parts:
+        # (id, label, bucket, cnt) — occurrences pre-aggregated per doc
+        # ONCE (the margin and gradient sums are linear in the occurrence
+        # count, so Σ_occurrences w ≡ Σ_buckets cnt·w exactly), PLUS one
+        # __bias__ row per doc with cnt=1: the bias then rides the same
+        # join/sum/update arithmetic as every other bucket (margin picks
+        # up bias_q·1, the bucket gradient at __bias__ IS the bias
+        # gradient), which folds the former separate per-iteration bias
+        # aggregation + collect into the one gradient collect.  The label
+        # rides along as a grouping key so no per-iteration docs join is
+        # needed, and the table is hash-partitioned by doc id so the
+        # per-iteration margin aggregation needs no exchange.  Net shape
+        # per iteration: broadcast the weight table, map-side margin agg,
+        # one bucket-space-bounded exchange, ONE collect.
+        pairs = (_occurrences(labeled, id_col, text_col, hex_chars)
+                 .groupBy("__id", "bucket")
+                 .agg(F.count("*").alias("__cnt"))
+                 .unionByName(docs.select(
+                     "__id", F.lit(BIAS_BUCKET).alias("bucket"),
+                     F.lit(1).cast("long").alias("__cnt")))
+                 .join(docs, "__id")
+                 .repartition(k_parts, "__id")
+                 .persist())
+        try:
+            weights: dict[str, int] = {BIAS_BUCKET: 0}   # bucket -> w_q
             for _ in range(iters):
                 # pandas → Arrow: the weight table lands as JVM-side Arrow
                 # batches (no Python-worker parallelize tasks) — measured
@@ -213,8 +194,8 @@ def train_quality_classifier(labeled: DataFrame, id_col: str,
                     delta = abs(num) // denom * (1 if num >= 0 else -1)
                     weights[row["bucket"]] = \
                         weights.get(row["bucket"], 0) + delta
-    finally:
-        pairs.unpersist()
+        finally:
+            pairs.unpersist()
 
     bias_q = weights.pop(BIAS_BUCKET)
     rows = sorted(weights.items()) + [(BIAS_BUCKET, bias_q)]

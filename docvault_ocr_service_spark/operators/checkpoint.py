@@ -174,12 +174,6 @@ class ParquetCheckpointStore:
         ).select("url")
         return input_df.join(settled, "url", "left_anti")
 
-    def prior_attempts(self) -> DataFrame:
-        """url → attempts so far (for attempt accounting on retries)."""
-        return (self.read_checkpoint()
-                .groupBy("url")
-                .agg(F.max("attempt").alias("prior_attempt")))
-
     # -- merge ---------------------------------------------------------------
     def merge_results(self, results: DataFrame, run_id: str) -> None:
         """MERGE new result rows into results + checkpoint tables.
@@ -211,12 +205,25 @@ class ParquetCheckpointStore:
                 .withColumn("merged_at", F.lit(now).cast("timestamp")))
         done.write.mode("append").parquet(self.results_dir)
 
-        # no broadcast hint: Catalyst broadcasts while the checkpoint is
-        # small and switches to a shuffled join once it isn't — forcing a
-        # broadcast here would OOM at 10^12-url state
+        # a url's previous row can only live in its own bucket, so the
+        # touched buckets' rows serve both the attempt accounting and
+        # the upsert — untouched buckets are never read
+        results = results.withColumn("_b", self._bucket_col())
+        # bounded driver-side collect: at most n_buckets ints
+        touched = sorted(r["_b"] for r in
+                         results.select("_b").distinct().collect())
+        if not touched:
+            return
+        old_touched = self._read_bucket_rows(touched)
+        prior = (old_touched.groupBy("url")
+                 .agg(F.max("attempt").alias("prior_attempt")))
+
+        # no broadcast hint: Catalyst broadcasts while the touched
+        # buckets are small and switches to a shuffled join once they
+        # aren't — forcing a broadcast here would OOM at 10^12-url state
         new_cp = (
             results
-            .join(self.prior_attempts(), "url", "left")
+            .join(prior, "url", "left")
             .withColumn("attempt",
                         F.coalesce(F.col("prior_attempt"), F.lit(0)) + 1)
             .withColumn(
@@ -233,17 +240,9 @@ class ParquetCheckpointStore:
                 "error_kind", "error_msg",
                 F.lit(now).cast("timestamp").alias("updated_at"),
                 F.lit(run_id).alias("run_id"),
+                "_b",
             )
-            .withColumn("_b", self._bucket_col())
         )
-
-        # bounded driver-side collect: at most n_buckets ints
-        touched = sorted(r["_b"] for r in
-                         new_cp.select("_b").distinct().collect())
-        if not touched:
-            return
-
-        old_touched = self._read_bucket_rows(touched)
         merged = old_touched.unionByName(new_cp)
 
         # upsert: old rows lose to new rows on the same url
@@ -257,12 +256,12 @@ class ParquetCheckpointStore:
         self._swap_buckets(merged, touched)
 
     def _read_bucket_rows(self, buckets: list[int]) -> DataFrame:
-        """Rows currently stored in the given buckets, with ``_b``."""
+        """Rows currently stored in the given buckets, with ``_b``
+        (after finishing crashed swaps and migrating a flat layout)."""
         self._recover_interrupted_swap(self.checkpoint_dir)
-        if os.path.isdir(self.checkpoint_dir):
-            self._recover_bucket_swaps()
-        paths = [self._bucket_path(k) for k in buckets
-                 if os.path.isdir(self._bucket_path(k))]
+        existing = set(self._existing_buckets())
+        paths = [p for p in map(self._bucket_path, buckets)
+                 if p in existing]
         if not paths:
             return (self.spark.createDataFrame([], CHECKPOINT_SCHEMA)
                     .withColumn("_b", F.lit(0)))

@@ -327,14 +327,14 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     # loop's shuffle layout (operators/tuning.py — label rows are a few
     # bytes each, and the min-label arithmetic is integer, so partition
     # layout cannot perturb results)
-    from .tuning import iteration_shuffles
+    from . import tuning
 
     row0 = labels.agg(F.sum("component").alias("s"),
                       F.count("*").alias("n")).first()
     prev_sum, n_nodes = row0["s"], row0["n"]
     converged = False
     spark = edges.sparkSession
-    with iteration_shuffles(spark, n_nodes):
+    with tuning.iteration_shuffles(spark, n_nodes):
         for it in range(max_iter):
             neighbor_min = (sym.join(labels,
                                      sym["v"] == labels["node"])

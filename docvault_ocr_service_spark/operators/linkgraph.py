@@ -21,39 +21,12 @@ Scale shape:
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.web import url_host
+from . import tuning
 
-_PARALLELISM_FIRST = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-
-
-@contextmanager
-def _coalesce_by_size(spark):
-    """Scope AQE's size-based partition coalescing to the iterative
-    loops: rank/score state is a handful of bytes per node, and with
-    the default ``parallelismFirst=true`` every per-iteration shuffle
-    keeps the full shuffle-partition count — ~0.15 s of task-launch
-    overhead per stage on this box for rows that fit one partition
-    (measured r7: host_pagerank 1.83 s → 1.10 s with size-based
-    coalescing).  Session-scoped only for the loop: the setting hurts
-    compute-heavy-but-byte-small stages elsewhere (Catalyst sizes
-    partitions by bytes, not compute), so it is restored on exit."""
-    old = spark.conf.get(_PARALLELISM_FIRST, None)
-    spark.conf.set(_PARALLELISM_FIRST, "false")
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(_PARALLELISM_FIRST)
-        else:
-            spark.conf.set(_PARALLELISM_FIRST, old)
-
-
-from .tuning import iteration_shuffles as _iteration_shuffles
 
 HREF_RE = (r"""(?i)<a\s[^>]*?href\s*=\s*["']([^"'#][^"']*)["']""")
 
@@ -93,16 +66,6 @@ def host_edges(links: DataFrame) -> DataFrame:
 
 def pagerank(edges: DataFrame, damping: float = 0.85,
              iters: int = 5, node_col_out: str = "host") -> DataFrame:
-    """See _pagerank_impl — runs under size-based AQE coalescing
-    (the whole operator: setup aggregations and iterations alike move
-    a few bytes per node)."""
-    with _coalesce_by_size(edges.sparkSession):
-        return _pagerank_impl(edges, damping, iters, node_col_out)
-
-
-def _pagerank_impl(edges: DataFrame, damping: float = 0.85,
-                   iters: int = 5, node_col_out: str = "host"
-                   ) -> DataFrame:
     """Weighted PageRank over (src_host, dst_host, n_links) edges.
 
     Exact fixed-iteration form (the driver-gate oracle unrolls the same
@@ -166,7 +129,7 @@ def _pagerank_impl(edges: DataFrame, damping: float = 0.85,
     # mass scalar), which would double work per lazy level — those
     # keep the per-step checkpoint.
     cadence = 1 if any_dangling else 4
-    with _iteration_shuffles(spark, n):
+    with tuning.iteration_shuffles(spark, n):
         for it in range(iters):
             contribs = (shares.join(ranks, shares["src"] == ranks["node"])
                         .groupBy("dst")
@@ -209,14 +172,6 @@ def _pagerank_impl(edges: DataFrame, damping: float = 0.85,
 
 def hits(edges: DataFrame, iters: int = 5,
          node_col_out: str = "host") -> DataFrame:
-    """See _hits_impl — runs under size-based AQE coalescing (the
-    whole operator moves a few bytes per node)."""
-    with _coalesce_by_size(edges.sparkSession):
-        return _hits_impl(edges, iters, node_col_out)
-
-
-def _hits_impl(edges: DataFrame, iters: int = 5,
-               node_col_out: str = "host") -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999) over the weighted host
     multigraph (src_host, dst_host, n_links) — the complementary
     authority signal to ``pagerank`` (good hubs find good content;
@@ -256,7 +211,7 @@ def _hits_impl(edges: DataFrame, iters: int = 5,
     hub = nodes.select("node", F.lit(1.0 / n).alias("hub")) \
         .localCheckpoint(eager=True)
     auth = hub.select("node", F.lit(0.0).alias("auth"))
-    with _iteration_shuffles(spark, n):
+    with tuning.iteration_shuffles(spark, n):
         for _ in range(iters):
             raw_a = (e.join(hub, e["src"] == hub["node"])
                      .groupBy("dst")

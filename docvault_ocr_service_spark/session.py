@@ -17,8 +17,9 @@ The knobs below are the ones SURVEY §4 flags as *explicit engineering*:
   iteration pays ~0.15 s of task-launch overhead per 32-task stage on
   rows that fit one partition (measured r7: host_pagerank 1.82 s →
   1.12 s, dsir 2.37 s → 1.60 s with coalescing enabled).
-- ``spark.sql.shuffle.partitions`` sized to cores, not the 200 default —
-  on a real cluster this is set to ~2-3× total cores by the submitter.
+- ``spark.sql.shuffle.partitions`` sized to cores (at least 8), not the
+  200 default — on a real cluster this is set to ~2-3× total cores by
+  the submitter (``extra_conf`` overrides it).
 """
 
 from __future__ import annotations
@@ -33,19 +34,16 @@ ARROW_BATCH_BYTES = "16m"
 
 def get_spark(app_name: str = "docvault_ocr_service_spark",
               cores: int | None = None,
-              shuffle_partitions: int | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     """Build (or reuse) a local session; cores default to $SPARK_GRAFT_CPUS."""
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        shuffle_partitions = max(cores, 8)
 
     builder = (
         SparkSession.builder
         .master(f"local[{cores}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(cores, 8)))
         .config("spark.default.parallelism", str(cores))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

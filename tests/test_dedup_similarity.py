@@ -190,7 +190,7 @@ def test_dedup_lines(spark):
     assert out2[1] == "repeated inside\nrepeated inside"
 
 
-def test_connected_components_and_canonical_dedup(spark):
+def test_connected_components_and_canonical_dedup(spark, layouts):
     from docvault_ocr_service_spark.operators.dedup import (
         connected_components, dedup_keep_canonical)
 
@@ -198,10 +198,11 @@ def test_connected_components_and_canonical_dedup(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6),
          (10, 11), (11, 12), (10, 12)], ["a", "b"])
-    comp = {r["node"]: r["component"] for r in
-            connected_components(edges).collect()}
-    assert all(comp[n] == 1 for n in (1, 2, 3, 4, 5, 6))
-    assert all(comp[n] == 10 for n in (10, 11, 12))
+    for layout in layouts():
+        comp = {r["node"]: r["component"] for r in
+                connected_components(edges).collect()}
+        assert comp == {**dict.fromkeys((1, 2, 3, 4, 5, 6), 1),
+                        **dict.fromkeys((10, 11, 12), 10)}, layout
 
     docs = spark.createDataFrame([(i, f"t{i}") for i in
                                   (1, 2, 3, 4, 5, 6, 10, 11, 12, 99)],

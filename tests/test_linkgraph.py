@@ -58,19 +58,21 @@ def _py_pagerank(edges, damping=0.85, iters=5):
     return r
 
 
-def test_pagerank_matches_python_reference(spark):
+def test_pagerank_matches_python_reference(spark, layouts):
     # c is dangling (no out-edges); multigraph weight on a->b
     edges = [("a", "b", 3.0), ("a", "c", 1.0), ("b", "c", 1.0),
              ("d", "a", 1.0), ("b", "d", 2.0)]
     df = spark.createDataFrame(edges,
                                ["src_host", "dst_host", "n_links"])
-    got = {r["host"]: r["rank"] for r in pagerank(df, iters=5).collect()}
     want = _py_pagerank(edges, iters=5)
-    assert set(got) == set(want)
-    for v in want:
-        assert got[v] == pytest.approx(want[v], abs=1e-12)
-    # ranks form a probability distribution (dangling mass conserved)
-    assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
+    for layout in layouts():
+        got = {r["host"]: r["rank"]
+               for r in pagerank(df, iters=5).collect()}
+        assert set(got) == set(want), layout
+        for v in want:
+            assert got[v] == pytest.approx(want[v], abs=1e-12), layout
+        # ranks form a probability distribution (dangling mass conserved)
+        assert sum(got.values()) == pytest.approx(1.0, abs=1e-9), layout
 
 
 def test_pagerank_authority_ordering(spark):
@@ -105,23 +107,26 @@ def _py_hits(edges, iters):
     return hub, auth
 
 
-def test_hits_matches_python_reference(spark):
+def test_hits_matches_python_reference(spark, layouts):
     from docvault_ocr_service_spark.operators.linkgraph import hits
 
     edges = [("a", "b", 3.0), ("a", "c", 1.0), ("b", "c", 1.0),
              ("d", "a", 1.0), ("b", "d", 2.0)]
     df = spark.createDataFrame(edges,
                                ["src_host", "dst_host", "n_links"])
-    got = {r["host"]: (r["hub"], r["auth"])
-           for r in hits(df, iters=4).collect()}
     hub, auth = _py_hits(edges, iters=4)
-    assert set(got) == set(hub)
-    for v in hub:
-        assert got[v][0] == pytest.approx(hub[v], abs=1e-12)
-        assert got[v][1] == pytest.approx(auth[v], abs=1e-12)
-    # L1 normalization: both vectors sum to 1
-    assert sum(h for h, _ in got.values()) == pytest.approx(1.0, 1e-9)
-    assert sum(a for _, a in got.values()) == pytest.approx(1.0, 1e-9)
+    for layout in layouts():
+        got = {r["host"]: (r["hub"], r["auth"])
+               for r in hits(df, iters=4).collect()}
+        assert set(got) == set(hub), layout
+        for v in hub:
+            assert got[v][0] == pytest.approx(hub[v], abs=1e-12), layout
+            assert got[v][1] == pytest.approx(auth[v], abs=1e-12), layout
+        # L1 normalization: both vectors sum to 1
+        assert sum(h for h, _ in got.values()) \
+            == pytest.approx(1.0, 1e-9), layout
+        assert sum(a for _, a in got.values()) \
+            == pytest.approx(1.0, 1e-9), layout
 
 
 def test_hits_hub_vs_authority_roles(spark):

@@ -86,20 +86,20 @@ def _python_replay(rows, hex_chars=2, iters=5, lr_num=1, lr_den=2):
     return w, bias
 
 
-def test_training_matches_python_replay_exactly(spark):
+def test_training_matches_python_replay_exactly(spark, layouts):
     rows = _fixture_rows(10) + [(5000, "", 1), (5001, None, 0)]
-    model = train_quality_classifier(_df(spark, rows), "doc_id",
-                                     iters=4)
-    got = {r["bucket"]: r["w_q"] for r in model.collect()}
     w, bias = _python_replay(rows, iters=4)
-    want = {b: q for b, q in w.items() if q != 0 or b in got}
-    assert got.pop(BIAS_BUCKET) == bias
-    # every bucket the replay computed matches; Spark may also carry
-    # zero-weight buckets whose gradients cancelled
-    for b, q in got.items():
-        assert w.get(b, 0) == q, b
-    for b, q in w.items():
-        assert got.get(b, 0) == q, b
+    for layout in layouts():
+        model = train_quality_classifier(_df(spark, rows), "doc_id",
+                                         iters=4)
+        got = {r["bucket"]: r["w_q"] for r in model.collect()}
+        assert got.pop(BIAS_BUCKET) == bias, layout
+        # every bucket the replay computed matches; Spark may also carry
+        # zero-weight buckets whose gradients cancelled
+        for b, q in got.items():
+            assert w.get(b, 0) == q, (b, layout)
+        for b, q in w.items():
+            assert got.get(b, 0) == q, (b, layout)
 
 
 def test_score_featureless_doc_gets_bias_margin(spark):
