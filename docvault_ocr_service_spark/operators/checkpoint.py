@@ -18,12 +18,25 @@ against a table bucketed ``bucket(64, url)`` (``operators/iceberg.py`` has
 the DDL) and only data files containing matched urls rewrite.
 ``ParquetCheckpointStore`` mirrors that physically: the checkpoint is laid
 out as 64 url-hash buckets (``checkpoint/_b=0.._b=63``, partition-style
-names so plain ``spark.read.parquet(checkpoint_dir)`` still works; bucket =
-crc32(url) % 64 — engine-portable, seed-independent) and a MERGE rewrites
-*only the buckets containing updated urls*; untouched bucket files stay
-byte-identical on disk.  An incremental run touching k urls rewrites
-O(min(k, 64)) buckets, not the whole table — the property that keeps
-per-run MERGE cost bounded at 10^12 checkpoint rows.
+names, so reading the checkpoint root yields ``_b`` by partition
+discovery; bucket = crc32(url) % 64 — engine-portable, seed-independent)
+and a MERGE rewrites *only the buckets containing updated urls*; untouched
+bucket files stay byte-identical on disk.  An incremental run touching k
+urls rewrites O(min(k, 64)) buckets, not the whole table — the property
+that keeps per-run MERGE cost bounded at 10^12 checkpoint rows.
+
+A MERGE is a fixed few Spark jobs, whatever the bucket count:
+
+- reads list the bucket directories on the driver: they go through the
+  checkpoint root, a partition-pruned ``_b IN (touched)`` picks buckets,
+  and ``session.get_spark`` sets the parallel-listing threshold to
+  ``N_BUCKETS``, so no listing job starts;
+- the touched buckets' old rows and the run's new rows meet in ONE
+  exchange, a hash repartition on ``_b``; the prior attempt and the
+  upsert rank are one window over ``(_b, url)``, which that partitioning
+  already satisfies;
+- the write runs at most ``defaultParallelism`` tasks, each holding whole
+  buckets, so every ``_b=K`` directory gets exactly one file.
 """
 
 from __future__ import annotations
@@ -36,11 +49,17 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..schemas import CHECKPOINT_SCHEMA
 
 MAX_ATTEMPTS = 3  # app/redis_queue.py:45
 N_BUCKETS = 64    # matches iceberg.py bucket(64, url)
+
+# a checkpoint row as read from the bucketed layout: _b is the bucket
+# directory's partition value, not a column of the files
+_BUCKETED_SCHEMA = T.StructType(
+    CHECKPOINT_SCHEMA.fields + [T.StructField("_b", T.IntegerType())])
 
 
 def new_run_id() -> str:
@@ -60,11 +79,20 @@ class ParquetCheckpointStore:
         os.makedirs(base_dir, exist_ok=True)
 
     # -- bucket layout ---------------------------------------------------------
-    def _bucket_col(self):
+    def bucket_col(self):
         """url → bucket id; crc32 is the same function the dedup kernels
         use executor-side (zlib.crc32), so Python tests can predict it."""
         return F.pmod(F.crc32(F.col("url").cast("binary")),
                       F.lit(self.n_buckets)).cast("int")
+
+    def _by_bucket(self, df: DataFrame, touched: list[int]) -> DataFrame:
+        """The one layout of a bucket rewrite: hash-partition on ``_b``
+        into at most ``defaultParallelism`` tasks.  Each bucket lands
+        whole in one task, so the partitioned write leaves exactly one
+        file per ``_b=K`` directory, and no write stage is wider than
+        the slots."""
+        n = min(len(touched), self.spark.sparkContext.defaultParallelism)
+        return df.repartition(n, "_b")
 
     def _bucket_path(self, k: int) -> str:
         return os.path.join(self.checkpoint_dir, f"_b={k}")
@@ -87,11 +115,11 @@ class ParquetCheckpointStore:
         if not flat:
             return
         rows = (self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(*flat)
-                .withColumn("_b", self._bucket_col()))
+                .withColumn("_b", self.bucket_col()))
         touched = sorted(r["_b"] for r in
                          rows.select("_b").distinct().collect())
         if touched:
-            self._swap_buckets(rows, touched)
+            self._swap_buckets(self._by_bucket(rows, touched), touched)
         for f in flat:
             os.remove(f)
         for extra in ("_SUCCESS",):
@@ -116,11 +144,19 @@ class ParquetCheckpointStore:
 
     # -- reads ---------------------------------------------------------------
     def read_checkpoint(self) -> DataFrame:
+        return self._read_buckets().drop("_b")
+
+    def _read_buckets(self) -> DataFrame:
+        """Every stored row with its ``_b`` (after finishing crashed swaps
+        and migrating a flat layout).  One path, the checkpoint root:
+        Spark lists its bucket directories on the driver (see the
+        listing threshold in ``session.get_spark``), and a filter on
+        ``_b`` prunes whole directories before any file is opened."""
         self._recover_interrupted_swap(self.checkpoint_dir)
-        paths = self._existing_buckets()
-        if not paths:
-            return self.spark.createDataFrame([], CHECKPOINT_SCHEMA)
-        return self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(*paths)
+        if not self._existing_buckets():
+            return self.spark.createDataFrame([], _BUCKETED_SCHEMA)
+        return (self.spark.read.schema(_BUCKETED_SCHEMA)
+                .parquet(self.checkpoint_dir))
 
     @staticmethod
     def _recover_interrupted_swap(target: str) -> None:
@@ -175,7 +211,9 @@ class ParquetCheckpointStore:
         return input_df.join(settled, "url", "left_anti")
 
     # -- merge ---------------------------------------------------------------
-    def merge_results(self, results: DataFrame, run_id: str) -> None:
+    def merge_results(self, results: DataFrame, run_id: str,
+                      touched: list[int] | None = None,
+                      n_done: int | None = None) -> None:
         """MERGE new result rows into results + checkpoint tables.
 
         ``results`` must already be materialized (the job runner stages
@@ -189,8 +227,22 @@ class ParquetCheckpointStore:
         dedupes by latest run.
 
         Incrementality: only buckets whose urls appear in ``results``
-        rewrite (one Spark job over those buckets' rows + per-bucket
-        directory swaps); every other bucket's files are untouched.
+        rewrite; every other bucket's files are untouched.  The rewrite
+        plans a single exchange: the touched buckets' old rows
+        (read through a driver-side listing of the checkpoint root,
+        pruned to those buckets) are unioned with the new rows and hash
+        partitioned on ``_b`` into at most ``defaultParallelism`` tasks;
+        a single window over ``(_b, url)`` takes each url's prior attempt
+        (its max over the old rows) and ranks the upsert; the partitioned
+        write leaves one file per bucket directory, which is then swapped
+        into place.
+
+        ``touched`` (the bucket ids of ``results``' non-null urls) and
+        ``n_done`` (its number of done rows) are for a caller that already
+        knows them, e.g. from an ``Observation`` on the write that staged
+        ``results``: ``touched`` saves the scan that finds the buckets,
+        and ``n_done == 0`` skips the results append, which would
+        otherwise add an empty file.  Without them nothing is skipped.
         """
         now = datetime.now(timezone.utc)
 
@@ -200,89 +252,78 @@ class ParquetCheckpointStore:
         # rather than letting one bad row fail the whole merge
         results = results.where(F.col("url").isNotNull())
 
-        done = (results.where(F.col("status") == "done")
-                .withColumn("run_id", F.lit(run_id))
-                .withColumn("merged_at", F.lit(now).cast("timestamp")))
-        done.write.mode("append").parquet(self.results_dir)
+        if n_done != 0:
+            (results.where(F.col("status") == "done")
+             .withColumn("run_id", F.lit(run_id))
+             .withColumn("merged_at", F.lit(now).cast("timestamp"))
+             .write.mode("append").parquet(self.results_dir))
+
+        results = results.withColumn("_b", self.bucket_col())
+        if touched is None:
+            # bounded driver-side collect: at most n_buckets ints
+            touched = sorted(r["_b"] for r in
+                             results.select("_b").distinct().collect())
+        if not touched:
+            return
 
         # a url's previous row can only live in its own bucket, so the
         # touched buckets' rows serve both the attempt accounting and
-        # the upsert — untouched buckets are never read
-        results = results.withColumn("_b", self._bucket_col())
-        # bounded driver-side collect: at most n_buckets ints
-        touched = sorted(r["_b"] for r in
-                         results.select("_b").distinct().collect())
-        if not touched:
-            return
-        old_touched = self._read_bucket_rows(touched)
-        prior = (old_touched.groupBy("url")
-                 .agg(F.max("attempt").alias("prior_attempt")))
+        # the upsert — untouched buckets are never read.  New rows carry
+        # a null attempt until the window has seen the old ones.
+        new = results.select(
+            "url", "status", F.lit(None).cast("int").alias("attempt"),
+            "error_kind", "error_msg",
+            F.lit(now).cast("timestamp").alias("updated_at"),
+            F.lit(run_id).alias("run_id"), "_b",
+            F.lit(True).alias("_new"))
+        rows = self._by_bucket(
+            self._read_buckets().where(F.col("_b").isin(touched))
+            .withColumn("_new", F.lit(False))
+            .unionByName(new), touched)
 
-        # no broadcast hint: Catalyst broadcasts while the touched
-        # buckets are small and switches to a shuffled join once they
-        # aren't — forcing a broadcast here would OOM at 10^12-url state
-        new_cp = (
-            results
-            .join(prior, "url", "left")
-            .withColumn("attempt",
-                        F.coalesce(F.col("prior_attempt"), F.lit(0)) + 1)
+        # upsert: old rows lose to new rows on the same url (a new row's
+        # attempt would exceed every old one, so _new ranks exactly as
+        # the computed attempt would); the prior attempt is the max over
+        # the whole url partition, in which only old rows carry one
+        latest = Window.partitionBy("_b", "url").orderBy(
+            F.col("updated_at").desc(), F.col("_new").desc(),
+            F.col("attempt").desc())
+        url_rows = latest.rowsBetween(Window.unboundedPreceding,
+                                      Window.unboundedFollowing)
+        attempt = F.coalesce(F.col("_prior"), F.lit(0)) + 1
+        merged = (
+            rows.select("*",
+                        F.max("attempt").over(url_rows).alias("_prior"),
+                        F.row_number().over(latest).alias("_rank"))
+            .where(F.col("_rank") == 1)
+            .withColumn("attempt", F.when(F.col("_new"), attempt)
+                        .otherwise(F.col("attempt")))
             .withColumn(
                 "status",
                 F.when(
-                    (F.col("status") == "failed_retryable")
+                    F.col("_new")
+                    & (F.col("status") == "failed_retryable")
                     & (F.col("attempt") >= MAX_ATTEMPTS),
                     F.lit("failed_permanent"),
                 ).otherwise(F.col("status")),
             )
-            .select(
-                "url", "status",
-                F.col("attempt").cast("int"),
-                "error_kind", "error_msg",
-                F.lit(now).cast("timestamp").alias("updated_at"),
-                F.lit(run_id).alias("run_id"),
-                "_b",
-            )
+            .select(*CHECKPOINT_SCHEMA.fieldNames(), "_b")
         )
-        merged = old_touched.unionByName(new_cp)
-
-        # upsert: old rows lose to new rows on the same url
-        w = Window.partitionBy("url").orderBy(
-            F.col("updated_at").desc(), F.col("attempt").desc())
-        merged = (merged
-                  .withColumn("_rank", F.row_number().over(w))
-                  .where(F.col("_rank") == 1)
-                  .drop("_rank"))
-
         self._swap_buckets(merged, touched)
-
-    def _read_bucket_rows(self, buckets: list[int]) -> DataFrame:
-        """Rows currently stored in the given buckets, with ``_b``
-        (after finishing crashed swaps and migrating a flat layout)."""
-        self._recover_interrupted_swap(self.checkpoint_dir)
-        existing = set(self._existing_buckets())
-        paths = [p for p in map(self._bucket_path, buckets)
-                 if p in existing]
-        if not paths:
-            return (self.spark.createDataFrame([], CHECKPOINT_SCHEMA)
-                    .withColumn("_b", F.lit(0)))
-        return (self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(*paths)
-                .withColumn("_b", self._bucket_col()))
 
     def _swap_buckets(self, df: DataFrame, touched: list[int]) -> None:
         """Write the touched buckets' new contents in ONE Spark job
-        (partitioned staging write), then swap each bucket directory into
-        place.  Each individual swap is atomic (backup rename + restore
-        on the read path); a crash between swaps leaves earlier buckets
-        new and later ones old — consistent, because result rows were
-        appended first, so re-claiming an un-flipped url merely appends a
+        (partitioned staging write of ``df``, laid out by
+        ``_by_bucket``), then swap each bucket directory into place.
+        Each individual swap is atomic (backup rename + restore on the
+        read path); a crash between swaps leaves earlier buckets new and
+        later ones old — consistent, because result rows were appended
+        first, so re-claiming an un-flipped url merely appends a
         duplicate that ``read_results_current`` dedupes."""
         staging = self.checkpoint_dir + ".staging"
         if os.path.isdir(staging):
             shutil.rmtree(staging)
-        # ~one file per touched bucket: repartition by _b before the
-        # partitioned write so each bucket's rows land in one task
-        (df.repartition(max(len(touched), 1), "_b")
-           .write.partitionBy("_b").mode("overwrite").parquet(staging))
+        df.write.partitionBy("_b").mode("overwrite").parquet(staging)
         os.makedirs(self.checkpoint_dir, exist_ok=True)
         for k in touched:
             src = os.path.join(staging, f"_b={k}")
@@ -305,11 +346,10 @@ class ParquetCheckpointStore:
         including its dry-run mode.  Returns the number of rows that
         were (or would be) removed.  Only buckets holding doomed rows
         rewrite."""
-        cp = self.read_checkpoint()
-        doomed = cp.where(
-            (F.col("status") != "failed_retryable")
-            & (F.col("updated_at") < F.lit(older_than))) \
-            .withColumn("_b", self._bucket_col())
+        cp = self._read_buckets()
+        keep = ((F.col("status") == "failed_retryable")
+                | (F.col("updated_at") >= F.lit(older_than)))
+        doomed = cp.where(~keep)
         touched = sorted(r["_b"] for r in
                          doomed.select("_b").distinct().collect())
         if not touched or dry_run:
@@ -317,8 +357,6 @@ class ParquetCheckpointStore:
             # dry runs must not write anything
             return doomed.count()
         n = doomed.count()
-        survivors = (self._read_bucket_rows(touched)
-                     .where((F.col("status") == "failed_retryable")
-                            | (F.col("updated_at") >= F.lit(older_than))))
-        self._swap_buckets(survivors, touched)
+        survivors = cp.where(F.col("_b").isin(touched) & keep)
+        self._swap_buckets(self._by_bucket(survivors, touched), touched)
         return n

@@ -16,7 +16,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..extract.document import MAX_PAYLOAD_BYTES
@@ -130,8 +130,16 @@ def run_extract_job(spark: SparkSession, input_df: DataFrame,
 
     # Stage the raw run output once — everything downstream (merge, lineage,
     # metrics) reads the staged parquet instead of re-running extraction.
+    # The write also observes the run's counts and the buckets its urls
+    # hash to, so neither the report nor the MERGE re-scans for them.
     run_dir = os.path.join(state_dir, "runs", run_id)
-    extracted.write.mode("overwrite").parquet(run_dir)
+    stage = Observation()
+    (extracted.observe(stage,
+                       F.count(F.lit(1)).alias("total"),
+                       F.count_if(F.col("status") == "done").alias("done"),
+                       F.collect_set(store.bucket_col()).alias("touched"))
+     .write.mode("overwrite").parquet(run_dir))
+    counts = stage.get
     staged = spark.read.parquet(run_dir)
 
     if hocr_dir is not None:
@@ -142,15 +150,14 @@ def run_extract_job(spark: SparkSession, input_df: DataFrame,
          .write.mode("overwrite")
          .parquet(os.path.join(hocr_dir, f"run={run_id}")))
 
-    store.merge_results(staged, run_id)
+    # a run that claimed nothing (or completed nothing) appends no empty
+    # results file and, with no touched bucket, runs no MERGE; lineage
+    # and metrics still record it
+    store.merge_results(staged, run_id, touched=sorted(counts["touched"]),
+                        n_done=counts["done"])
     checkpoint = store.read_checkpoint()
     append_observability(spark, state_dir, staged, checkpoint, run_id)
 
-    counts = staged.agg(
-        F.count("*").alias("total"),
-        F.coalesce(F.sum(F.when(F.col("status") == "done", 1)
-                         .otherwise(0)), F.lit(0)).alias("done"),
-    ).first()
     return RunReport(run_id=run_id, claimed=counts["total"],
                      completed=counts["done"],
                      failed=counts["total"] - counts["done"])
