@@ -285,40 +285,3 @@ def parse_ogg_vorbis(data: bytes) -> dict:
         "n_samples": n_samples,
         "duration_ms": n_samples * 1000.0 / sample_rate,
     }
-
-
-def encode_flac_header(sample_rate: int = 44100, channels: int = 2,
-                       bits: int = 16, n_samples: int = 44100) -> bytes:
-    """Deterministic STREAMINFO-only FLAC fixture (no audio frames)."""
-    si = bytearray(34)
-    si[0:2] = (4096).to_bytes(2, "big")
-    si[2:4] = (4096).to_bytes(2, "big")
-    si[10] = (sample_rate >> 12) & 0xFF
-    si[11] = (sample_rate >> 4) & 0xFF
-    si[12] = ((sample_rate & 0xF) << 4) | ((channels - 1) << 1) \
-        | ((bits - 1) >> 4)
-    si[13] = (((bits - 1) & 0xF) << 4) | ((n_samples >> 32) & 0xF)
-    si[14:18] = (n_samples & 0xFFFFFFFF).to_bytes(4, "big")
-    return b"fLaC" + bytes([0x80]) + (34).to_bytes(3, "big") + bytes(si)
-
-
-def encode_ogg_vorbis_header(sample_rate: int = 44100, channels: int = 2,
-                             n_samples: int = 44100) -> bytes:
-    """Deterministic two-page Ogg/Vorbis fixture: an identification
-    page and a final page carrying the total-samples granule."""
-    ident = (b"\x01vorbis" + (0).to_bytes(4, "little")
-             + bytes([channels]) + sample_rate.to_bytes(4, "little")
-             + b"\x00" * 13)
-
-    def page(granule: int, seq: int, payload: bytes,
-             header_type: int) -> bytes:
-        head = (b"OggS\x00" + bytes([header_type])
-                + granule.to_bytes(8, "little", signed=True)
-                + (1).to_bytes(4, "little")       # serial
-                + seq.to_bytes(4, "little")
-                + b"\x00\x00\x00\x00"             # crc (readers we feed
-                + bytes([1, len(payload)]))       # don't verify it)
-        return head + payload
-
-    return (page(0, 0, ident, 0x02)
-            + page(n_samples, 1, b"\x00", 0x04))

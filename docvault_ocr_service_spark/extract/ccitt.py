@@ -387,66 +387,3 @@ def decode_g3_2d(data: bytes, width: int, height: int) -> np.ndarray:
             _paint_line(out[y], cur, width)
             ref = [t for t in cur if t < width]
     return out
-
-
-def _emit_runs_line(bits: list, row) -> None:
-    runs = []
-    pos = 0
-    w = len(row)
-    while pos < w:
-        color = row[pos]
-        end = pos
-        while end < w and row[end] == color:
-            end += 1
-        runs.append((end - pos, color == 0))
-        pos = end
-    if not runs or not runs[0][1]:
-        runs.insert(0, (0, True))           # lines start with a white run
-    for n, white in runs:
-        _emit_run(bits, n, white)
-
-
-def encode_mh(img: np.ndarray) -> bytes:
-    """(H, W) 0=white/nonzero=black → Compression=2 bitstream
-    (byte-aligned rows, no EOL)."""
-    arr = (np.asarray(img) != 0).astype(np.uint8)
-    out: list[str] = []
-    for y in range(arr.shape[0]):
-        bits: list[str] = []
-        _emit_runs_line(bits, arr[y])
-        s = "".join(bits)
-        out.append(s + "0" * (-len(s) % 8))
-    s = "".join(out)
-    return bytes(int(s[i:i + 8], 2) for i in range(0, len(s), 8))
-
-
-def encode_g3_2d(img: np.ndarray, k: int = 3) -> bytes:
-    """(H, W) → Compression=3 2-D bitstream: every ``k``-th line 1-D
-    (EOL+1), the rest 2-D (EOL+0) — the standard K-parameter shape."""
-    arr = (np.asarray(img) != 0).astype(np.uint8)
-    bits: list[str] = []
-    ref: list[int] = []
-    for y in range(arr.shape[0]):
-        cur = _transitions(arr[y])
-        if y % k == 0:
-            bits.append(_EOL + "1")
-            _emit_runs_line(bits, arr[y])
-        else:
-            bits.append(_EOL + "0")
-            _encode_2d_line(bits, cur, ref, arr.shape[1])
-        ref = cur
-    s = "".join(bits)
-    s += "0" * (-len(s) % 8)
-    return bytes(int(s[i:i + 8], 2) for i in range(0, len(s), 8))
-
-
-def encode_g3_1d(img: np.ndarray) -> bytes:
-    """(H, W) → Compression=3 1-D bitstream (EOL before every line)."""
-    arr = (np.asarray(img) != 0).astype(np.uint8)
-    bits: list[str] = []
-    for y in range(arr.shape[0]):
-        bits.append(_EOL)
-        _emit_runs_line(bits, arr[y])
-    s = "".join(bits)
-    s += "0" * (-len(s) % 8)
-    return bytes(int(s[i:i + 8], 2) for i in range(0, len(s), 8))

@@ -3,17 +3,33 @@
 Spark restatement of the reference's whole service loop (SURVEY §3.1):
 scan → claim (MERGE-checkpoint anti-join) → size-routed salted
 repartition → one ``mapInPandas`` extraction stage → staged run output →
-MERGE into results/checkpoint → lineage + metrics appends.
+MERGE into results/checkpoint → lineage + metrics appends → staged output
+removed.
 
-Physical shape (why this survives 100×): a single wide map stage with no
-shuffle except the explicit repartitions; the only aggregations are the
-tiny lineage/metrics rollups.  The claim anti-join broadcasts when the
-checkpoint is small and sort-merges when it isn't — Catalyst's call.
+Physical shape (why this survives 100×): one input scan, one checkpoint
+scan and one claim anti-join feed ONE routing exchange
+(``operators/skew.py::route_once``, a ``repartitionById`` that spreads
+normal rows by a salted hash over ``n`` partitions and places oversized
+rows thin in ``max(n // 4, 1)`` partitions of their own), and one
+``mapInPandas`` extraction stage follows it.  The anti-join broadcasts
+when the checkpoint is small and sort-merges when it isn't — Catalyst's
+call.  Only when a limit-1 probe of the input finds an oversized PDF
+does a second branch appear: the page-explode route of
+``operators/pages.py::extract_pdf_docs``, unioned after.  The only
+aggregations are that route's page reassembly and the tiny
+lineage/metrics rollups.
+
+The staged run output (``runs/<run_id>``) lives only as long as the run:
+it is removed once the MERGE and the lineage/metrics appends are done,
+and a run starts by removing what a crashed run left there.  Runs into
+one state dir must therefore not overlap — the checkpoint swap already
+requires that.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -24,7 +40,12 @@ from ..functions.udfs import run_extraction
 from ..operators.checkpoint import ParquetCheckpointStore, new_run_id
 from ..operators.lineage import append_observability
 from ..operators.pages import extract_pdf_docs
-from ..operators.skew import route_by_size
+from ..operators.skew import (
+    DEFAULT_SIZE_THRESHOLD,
+    is_oversized,
+    route_by_size,
+    route_once,
+)
 
 
 @dataclass
@@ -49,9 +70,47 @@ def is_image_payload(col: Column) -> Column:
     return out
 
 
+def giant_pdf(size_threshold: int) -> Column:
+    """An oversized PDF payload without precomputed text that the
+    admission cap lets through: the rows of the page-explode route."""
+    return (is_oversized("html", size_threshold)
+            & (F.coalesce(F.col("text"), F.lit("")) == "")
+            & (F.substring("html", 1, 5) == F.lit(b"%PDF-"))
+            & (F.octet_length("html") <= MAX_PAYLOAD_BYTES))
+
+
+def extraction_stage(input_df: DataFrame, claimed: DataFrame,
+                     n_partitions: int,
+                     size_threshold: int = DEFAULT_SIZE_THRESHOLD
+                     ) -> DataFrame:
+    """The run's RESULT_SCHEMA rows for ``claimed`` (``input_df`` after
+    the claim), planned but not executed: only the probe below runs.
+
+    Every claimed row goes through one ``route_once`` exchange and one
+    ``run_extraction`` stage.  Oversized PDFs take the page-explode
+    route instead (the reference's own unit-of-work choice for big
+    documents, app/worker.py:254-324): a 500-page giant becomes 500
+    distributable page rows instead of one straggler task.  Giant HTML
+    (no page structure), admission-cap violations and precomputed-text
+    rows keep the whole-doc kernel.  The page route is only planned
+    when a probe finds such a PDF in ``input_df``: ``isEmpty`` is a
+    limit-1 scan that stops at the first hit and returns no column to
+    the driver, and it reads the input rather than the claim so it
+    never pays for the anti-join.
+    """
+    pdf = giant_pdf(size_threshold)
+    if input_df.where(pdf).isEmpty():
+        return run_extraction(route_once(claimed, n_partitions,
+                                         size_threshold))
+    return (run_extraction(route_once(claimed.where(~pdf), n_partitions,
+                                      size_threshold))
+            .unionByName(extract_pdf_docs(claimed.where(pdf),
+                                          n_partitions)))
+
+
 def run_extract_job(spark: SparkSession, input_df: DataFrame,
                     state_dir: str, *, n_partitions: int | None = None,
-                    size_threshold: int = 256 * 1024,
+                    size_threshold: int = DEFAULT_SIZE_THRESHOLD,
                     media_dir: str | None = None,
                     hocr_dir: str | None = None) -> RunReport:
     """One resumable run over ``input_df`` (INPUT_SCHEMA shape).
@@ -77,6 +136,8 @@ def run_extract_job(spark: SparkSession, input_df: DataFrame,
 
     store = ParquetCheckpointStore(spark, state_dir)
     run_id = new_run_id()
+    runs_root = os.path.join(state_dir, "runs")
+    shutil.rmtree(runs_root, ignore_errors=True)  # a crashed run's leftover
 
     claimed = store.claimable(input_df)
 
@@ -109,30 +170,14 @@ def run_extract_job(spark: SparkSession, input_df: DataFrame,
         finally:
             imgs.unpersist()
 
-    normal, giants = route_by_size(claimed, n_partitions,
-                                   size_threshold=size_threshold)
-    # Oversized PDFs take the page-explode route (the reference's own
-    # unit-of-work choice for big documents, app/worker.py:254-324): a
-    # 500-page giant becomes 500 distributable page rows instead of one
-    # straggler task.  Giant HTML (no page structure), admission-cap
-    # violations, and precomputed-text rows keep the whole-doc kernel.
-    giant_pdf = (
-        (F.col("text").isNull() | (F.col("text") == ""))
-        & (F.substring("html", 1, 5) == F.lit(b"%PDF-"))
-        & (F.octet_length("html") <= MAX_PAYLOAD_BYTES)
-    )
-    extracted = (
-        run_extraction(normal)
-        .unionByName(run_extraction(giants.where(~giant_pdf)))
-        .unionByName(extract_pdf_docs(giants.where(giant_pdf),
-                                      n_partitions))
-    )
+    extracted = extraction_stage(input_df, claimed, n_partitions,
+                                 size_threshold)
 
     # Stage the raw run output once — everything downstream (merge, lineage,
     # metrics) reads the staged parquet instead of re-running extraction.
     # The write also observes the run's counts and the buckets its urls
     # hash to, so neither the report nor the MERGE re-scans for them.
-    run_dir = os.path.join(state_dir, "runs", run_id)
+    run_dir = os.path.join(runs_root, run_id)
     stage = Observation()
     (extracted.observe(stage,
                        F.count(F.lit(1)).alias("total"),
@@ -157,6 +202,7 @@ def run_extract_job(spark: SparkSession, input_df: DataFrame,
                         n_done=counts["done"])
     checkpoint = store.read_checkpoint()
     append_observability(spark, state_dir, staged, checkpoint, run_id)
+    shutil.rmtree(run_dir)
 
     return RunReport(run_id=run_id, claimed=counts["total"],
                      completed=counts["done"],

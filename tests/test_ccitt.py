@@ -78,7 +78,8 @@ def test_g4_tiff_media_row(spark):
 
 def test_mh_and_g3_roundtrip_fuzz():
     from docvault_ocr_service_spark.extract.ccitt import (
-        decode_g3_1d, decode_mh, encode_g3_1d, encode_mh)
+        decode_g3_1d, decode_mh)
+    from fixture_encoders import encode_g3_1d, encode_mh
 
     rng = np.random.RandomState(7)
     for _ in range(25):
@@ -95,8 +96,7 @@ def test_mh_g3_tiff_branches(spark):
     the fax branch."""
     import struct
 
-    from docvault_ocr_service_spark.extract.ccitt import (
-        encode_g3_1d, encode_g3_2d, encode_mh)
+    from fixture_encoders import encode_g3_1d, encode_g3_2d, encode_mh
 
     img = np.zeros((12, 28), np.uint8)
     img[4:8, 3:20] = 1
@@ -132,8 +132,8 @@ def test_mh_g3_tiff_branches(spark):
 
 
 def test_g3_2d_roundtrip_fuzz():
-    from docvault_ocr_service_spark.extract.ccitt import (
-        decode_g3_2d, encode_g3_2d)
+    from docvault_ocr_service_spark.extract.ccitt import decode_g3_2d
+    from fixture_encoders import encode_g3_2d
 
     rng = np.random.RandomState(13)
     for _ in range(20):
@@ -148,7 +148,7 @@ def test_fax_tiff_without_bitspersample_tag():
     tag 258 — the decode must not reject them."""
     import struct
 
-    from docvault_ocr_service_spark.extract.ccitt import encode_mh
+    from fixture_encoders import encode_mh
 
     img = np.zeros((8, 16), np.uint8)
     img[2:5, 4:12] = 1

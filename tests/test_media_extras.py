@@ -123,10 +123,9 @@ def test_mp3_media_row(spark):
 
 
 def test_flac_ogg_media_rows(spark):
-    from docvault_ocr_service_spark.extract.audio import (
-        encode_flac_header, encode_ogg_vorbis_header)
     from docvault_ocr_service_spark.functions.multimodal import (
         extract_media_features)
+    from fixture_encoders import encode_flac_header, encode_ogg_vorbis_header
 
     rows = [("f", "audio", encode_flac_header(48000, 2, 16, 96000)),
             ("v", "audio", encode_ogg_vorbis_header(22050, 1, 44100))]
@@ -147,7 +146,8 @@ def test_ogg_truncated_ident_and_payload_magic():
     import pytest
 
     from docvault_ocr_service_spark.extract.audio import (
-        AudioDecodeError, encode_ogg_vorbis_header, parse_ogg_vorbis)
+        AudioDecodeError, parse_ogg_vorbis)
+    from fixture_encoders import encode_ogg_vorbis_header
 
     trunc = (b"OggS" + b"\x00" * 22 + bytes([30]) + b"\x00" * 30
              + b"\x01vorbis")

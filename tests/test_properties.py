@@ -273,8 +273,8 @@ def test_ccitt_codecs_roundtrip(h, w, seed):
     import numpy as np
 
     from docvault_ocr_service_spark.extract.ccitt import (
-        decode_g3_1d, decode_g4, decode_mh, encode_g3_1d, encode_g4,
-        encode_mh)
+        decode_g3_1d, decode_g4, decode_mh, encode_g4)
+    from fixture_encoders import encode_g3_1d, encode_mh
 
     rng = np.random.RandomState(seed)
     img = (rng.rand(h, w) < rng.rand()).astype(np.uint8)
