@@ -28,9 +28,10 @@ their own partitions.  A row with a null url or payload still gets an
 id (the salt alone is hashed; a null size is not oversized), so no row
 is dropped.
 
+The extraction job and its media branch route with ``route_once``.
 ``route_by_size`` keeps the two-DataFrame form (``normal``, ``giants``)
-for callers that treat the halves differently; it uses the same size
-test and salts.
+for the benchmark scans and tests that take the halves apart; it uses
+the same size test and salts.
 """
 
 from __future__ import annotations

@@ -13,7 +13,7 @@ normal rows by a salted hash over ``n`` partitions and places oversized
 rows thin in ``max(n // 4, 1)`` partitions of their own), and one
 ``mapInPandas`` extraction stage follows it.  The anti-join broadcasts
 when the checkpoint is small and sort-merges when it isn't — Catalyst's
-call.  Only when a limit-1 probe of the input finds an oversized PDF
+call.  Only when a limit-1 probe finds an oversized PDF in the claim
 does a second branch appear: the page-explode route of
 ``operators/pages.py::extract_pdf_docs``, unioned after.  The only
 aggregations are that route's page reassembly and the tiny
@@ -40,12 +40,9 @@ from ..functions.udfs import run_extraction
 from ..operators.checkpoint import ParquetCheckpointStore, new_run_id
 from ..operators.lineage import append_observability
 from ..operators.pages import extract_pdf_docs
-from ..operators.skew import (
-    DEFAULT_SIZE_THRESHOLD,
-    is_oversized,
-    route_by_size,
-    route_once,
-)
+from ..operators.skew import DEFAULT_SIZE_THRESHOLD, is_oversized, route_once
+# not called here; perfbench's span tracer patches it by this module name
+from ..operators.skew import route_by_size  # noqa: F401
 
 
 @dataclass
@@ -84,7 +81,7 @@ def extraction_stage(input_df: DataFrame, claimed: DataFrame,
                      size_threshold: int = DEFAULT_SIZE_THRESHOLD
                      ) -> DataFrame:
     """The run's RESULT_SCHEMA rows for ``claimed`` (``input_df`` after
-    the claim), planned but not executed: only the probe below runs.
+    the claim), planned but not executed: only the probes below run.
 
     Every claimed row goes through one ``route_once`` exchange and one
     ``run_extraction`` stage.  Oversized PDFs take the page-explode
@@ -93,13 +90,19 @@ def extraction_stage(input_df: DataFrame, claimed: DataFrame,
     distributable page rows instead of one straggler task.  Giant HTML
     (no page structure), admission-cap violations and precomputed-text
     rows keep the whole-doc kernel.  The page route is only planned
-    when a probe finds such a PDF in ``input_df``: ``isEmpty`` is a
-    limit-1 scan that stops at the first hit and returns no column to
-    the driver, and it reads the input rather than the claim so it
-    never pays for the anti-join.
+    when such a PDF is claimed.  Two ``isEmpty`` probes decide it; each
+    is a limit-1 scan that stops at the first hit and returns no column
+    to the driver.  The first reads only ``input_df`` (one pass over its
+    payload column when it holds no giant PDF, the common case); only
+    when it finds one does the second run the anti-join, so a giant PDF
+    settled by an earlier run does not bring the page route back.  The
+    probes and the stage evaluate ``input_df`` separately, so it must
+    be deterministic; were they to disagree, a giant PDF would take the
+    whole-doc kernel, whose rows equal the page route's
+    (``tests/test_pages_and_ops.py``), at a straggler's cost.
     """
     pdf = giant_pdf(size_threshold)
-    if input_df.where(pdf).isEmpty():
+    if input_df.where(pdf).isEmpty() or claimed.where(pdf).isEmpty():
         return run_extraction(route_once(claimed, n_partitions,
                                          size_threshold))
     return (run_extraction(route_once(claimed.where(~pdf), n_partitions,
@@ -114,6 +117,10 @@ def run_extract_job(spark: SparkSession, input_df: DataFrame,
                     media_dir: str | None = None,
                     hocr_dir: str | None = None) -> RunReport:
     """One resumable run over ``input_df`` (INPUT_SCHEMA shape).
+
+    ``input_df`` must be deterministic (no unordered ``limit`` or
+    ``sample``): the media branch, the page-route probes and the
+    extraction stage each evaluate the claim over it.
 
     With ``media_dir`` set, image payloads additionally flow through the
     real decode path — features to ``media_dir/features/run=<id>`` and
@@ -147,18 +154,16 @@ def run_extract_job(spark: SparkSession, input_df: DataFrame,
             generate_thumbnails,
         )
 
-        raw_imgs = (claimed.where(F.col("html").isNotNull()
-                                  & is_image_payload(F.col("html")))
-                    .select(F.col("url").alias("media_id"),
-                            F.lit("image").alias("kind"),
-                            F.col("html").alias("payload")))
         # size-route before the decode map stage (the skew contract the
         # media functions document): giants go to their own thin
         # partitions instead of straggling a dense one
-        m_normal, m_giants = route_by_size(raw_imgs, n_partitions,
-                                           size_threshold=size_threshold,
-                                           payload_col="payload")
-        imgs = m_normal.unionByName(m_giants).persist()
+        imgs = (route_once(claimed.where(F.col("html").isNotNull()
+                                         & is_image_payload(F.col("html"))),
+                           n_partitions, size_threshold)
+                .select(F.col("url").alias("media_id"),
+                        F.lit("image").alias("kind"),
+                        F.col("html").alias("payload"))
+                .persist())
         try:
             extract_media_features(imgs, fake=False) \
                 .write.mode("overwrite").parquet(
