@@ -216,9 +216,9 @@ class ParquetCheckpointStore:
                       n_done: int | None = None) -> None:
         """MERGE new result rows into results + checkpoint tables.
 
-        ``results`` must already be materialized (the job runner stages
-        each run's raw output to parquet first) — this method consumes it
-        twice and must not recompute the extraction.
+        ``results`` must already be materialized (the job runner persists
+        each run's output and materializes it first) — this method
+        consumes it twice and must not recompute the extraction.
 
         Order matters: result rows land *before* the checkpoint flips to
         done (the reference stores the result then flips status,
@@ -239,10 +239,10 @@ class ParquetCheckpointStore:
 
         ``touched`` (the bucket ids of ``results``' non-null urls) and
         ``n_done`` (its number of done rows) are for a caller that already
-        knows them, e.g. from an ``Observation`` on the write that staged
-        ``results``: ``touched`` saves the scan that finds the buckets,
-        and ``n_done == 0`` skips the results append, which would
-        otherwise add an empty file.  Without them nothing is skipped.
+        knows them, e.g. from an ``Observation`` on the write that
+        materialized ``results``: ``touched`` saves the bucket scan, and
+        ``n_done == 0`` skips the results append, which would otherwise
+        add an empty file.  Without them nothing is skipped.
         """
         now = datetime.now(timezone.utc)
 

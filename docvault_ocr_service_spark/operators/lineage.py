@@ -18,8 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def lineage_rows(results: DataFrame, run_id: str,
-                 stage: str = "extract") -> DataFrame:
+def lineage_rows(results: DataFrame, run_id: str) -> DataFrame:
     """results → lineage(run_id, partition_id, stage, ts, docs_in,
     docs_out, errors, wall_ms)."""
     return (
@@ -35,18 +34,18 @@ def lineage_rows(results: DataFrame, run_id: str,
         .select(
             F.lit(run_id).alias("run_id"),
             "partition_id",
-            F.lit(stage).alias("stage"),
+            F.lit("extract").alias("stage"),
             F.current_timestamp().alias("ts"),
             "docs_in", "docs_out", "errors", "wall_ms",
         )
     )
 
 
-def metrics_row(results: DataFrame, checkpoint: DataFrame,
-                run_id: str) -> DataFrame:
-    """Run-level rollup (success/failure counts, duration, retry histogram —
-    the app/redis_queue.py:966-1048 aggregates as one select)."""
-    counts = results.agg(
+def metrics_row(results: DataFrame, run_id: str) -> DataFrame:
+    """Run-level rollup (success/failure counts, duration — the
+    app/redis_queue.py:966-1048 aggregates as one select)."""
+    return results.agg(
+        F.lit(run_id).alias("run_id"),
         F.count("*").alias("total"),
         F.coalesce(
             F.sum(F.when(F.col("status") == "done", 1).otherwise(0)),
@@ -57,16 +56,13 @@ def metrics_row(results: DataFrame, checkpoint: DataFrame,
         F.coalesce(F.sum("processing_time"), F.lit(0.0))
          .alias("total_duration"),
     )
-    retry_hist = (
-        checkpoint.groupBy(F.col("attempt").cast("string").alias("attempt"))
-        .count()
-        .agg(F.map_from_entries(
-            F.collect_list(F.struct("attempt", "count"))
-        ).alias("retry_distribution"))
-    )
-    return (counts.crossJoin(retry_hist)
-            .select(F.lit(run_id).alias("run_id"), "total", "completed",
-                    "failed", "total_duration", "retry_distribution"))
+
+
+def retry_distribution(checkpoint: DataFrame) -> dict[str, int]:
+    """The checkpoint's current retry histogram, attempt → url count
+    (the reference's retry counters, app/redis_queue.py:966-1048)."""
+    return {str(r["attempt"]): r["count"]
+            for r in checkpoint.groupBy("attempt").count().collect()}
 
 
 def batch_status(checkpoint: DataFrame) -> DataFrame:
@@ -89,9 +85,11 @@ def error_summary(checkpoint: DataFrame, top_n: int = 20) -> DataFrame:
 
 
 def append_observability(spark: SparkSession, base_dir: str,
-                         results: DataFrame, checkpoint: DataFrame,
-                         run_id: str) -> None:
-    lineage_rows(results, run_id).write.mode("append").parquet(
-        os.path.join(base_dir, "lineage"))
-    metrics_row(results, checkpoint, run_id).write.mode("append").parquet(
+                         results: DataFrame, run_id: str,
+                         total: int | None = None) -> None:
+    """``total``: ``results``' row count if known; 0 skips the lineage."""
+    if total != 0:
+        lineage_rows(results, run_id).write.mode("append").parquet(
+            os.path.join(base_dir, "lineage"))
+    metrics_row(results, run_id).write.mode("append").parquet(
         os.path.join(base_dir, "metrics"))

@@ -2,9 +2,9 @@
 
 Spark restatement of the reference's whole service loop (SURVEY §3.1):
 scan → claim (MERGE-checkpoint anti-join) → size-routed salted
-repartition → one ``mapInPandas`` extraction stage → staged run output →
-MERGE into results/checkpoint → lineage + metrics appends → staged output
-removed.
+repartition → one ``mapInPandas`` extraction stage, materialized once in
+executor storage → MERGE into results/checkpoint → lineage + metrics
+appends.
 
 Physical shape (why this survives 100×): one input scan, one checkpoint
 scan and one claim anti-join feed ONE routing exchange
@@ -19,19 +19,20 @@ does a second branch appear: the page-explode route of
 aggregations are that route's page reassembly and the tiny
 lineage/metrics rollups.
 
-The staged run output (``runs/<run_id>``) lives only as long as the run:
-it is removed once the MERGE and the lineage/metrics appends are done,
-and a run starts by removing what a crashed run left there.  Runs into
-one state dir must therefore not overlap — the checkpoint swap already
-requires that.
+The run's output reaches disk once, through the MERGE: the stage is
+persisted and materialized by one ``noop`` write.  A lost cached block
+recomputes against the file listing fixed when the stage was planned:
+the same claim, or a failed run on a bucket file the MERGE swapped away,
+never a re-claim against the new checkpoint.  Runs into one state dir
+must not overlap — the checkpoint swap requires that.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -143,8 +144,6 @@ def run_extract_job(spark: SparkSession, input_df: DataFrame,
 
     store = ParquetCheckpointStore(spark, state_dir)
     run_id = new_run_id()
-    runs_root = os.path.join(state_dir, "runs")
-    shutil.rmtree(runs_root, ignore_errors=True)  # a crashed run's leftover
 
     claimed = store.claimable(input_df)
 
@@ -178,36 +177,38 @@ def run_extract_job(spark: SparkSession, input_df: DataFrame,
     extracted = extraction_stage(input_df, claimed, n_partitions,
                                  size_threshold)
 
-    # Stage the raw run output once — everything downstream (merge, lineage,
-    # metrics) reads the staged parquet instead of re-running extraction.
-    # The write also observes the run's counts and the buckets its urls
-    # hash to, so neither the report nor the MERGE re-scans for them.
-    run_dir = os.path.join(runs_root, run_id)
+    # Materialize the run's output once, in executor storage; the write
+    # also observes the run's counts and the buckets its urls hash to, so
+    # neither the report nor the MERGE re-scans for them.
     stage = Observation()
-    (extracted.observe(stage,
-                       F.count(F.lit(1)).alias("total"),
-                       F.count_if(F.col("status") == "done").alias("done"),
-                       F.collect_set(store.bucket_col()).alias("touched"))
-     .write.mode("overwrite").parquet(run_dir))
-    counts = stage.get
-    staged = spark.read.parquet(run_dir)
+    staged = (extracted.observe(
+        stage,
+        F.count(F.lit(1)).alias("total"),
+        F.count_if(F.col("status") == "done").alias("done"),
+        F.collect_set(store.bucket_col()).alias("touched"))
+        .persist(StorageLevel.MEMORY_AND_DISK))
+    try:
+        staged.write.format("noop").mode("overwrite").save()
+        counts = stage.get
 
-    if hocr_dir is not None:
-        from ..functions.udfs import with_hocr
+        if hocr_dir is not None:
+            from ..functions.udfs import with_hocr
 
-        (with_hocr(staged.where(F.col("status") == "done"))
-         .select("url", "hocr")
-         .write.mode("overwrite")
-         .parquet(os.path.join(hocr_dir, f"run={run_id}")))
+            (with_hocr(staged.where(F.col("status") == "done"))
+             .select("url", "hocr")
+             .write.mode("overwrite")
+             .parquet(os.path.join(hocr_dir, f"run={run_id}")))
 
-    # a run that claimed nothing (or completed nothing) appends no empty
-    # results file and, with no touched bucket, runs no MERGE; lineage
-    # and metrics still record it
-    store.merge_results(staged, run_id, touched=sorted(counts["touched"]),
-                        n_done=counts["done"])
-    checkpoint = store.read_checkpoint()
-    append_observability(spark, state_dir, staged, checkpoint, run_id)
-    shutil.rmtree(run_dir)
+        # a run that completed nothing appends no empty results file; one
+        # that claimed nothing also appends no lineage and, with no
+        # touched bucket, runs no MERGE; its metrics row records it
+        store.merge_results(staged, run_id,
+                            touched=sorted(counts["touched"]),
+                            n_done=counts["done"])
+        append_observability(spark, state_dir, staged, run_id,
+                             total=counts["total"])
+    finally:
+        staged.unpersist()
 
     return RunReport(run_id=run_id, claimed=counts["total"],
                      completed=counts["done"],

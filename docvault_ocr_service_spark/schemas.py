@@ -109,6 +109,4 @@ METRICS_SCHEMA = T.StructType([
     T.StructField("completed", T.LongType(), False),
     T.StructField("failed", T.LongType(), False),
     T.StructField("total_duration", T.DoubleType(), False),
-    T.StructField("retry_distribution",
-                  T.MapType(T.StringType(), T.LongType()), True),
 ])

@@ -76,7 +76,7 @@ def stream_extract_merge(spark: SparkSession, input_dir: str,
             run_id = f"stream{batch_id:08d}"
             store.merge_results(batch_df, run_id)
             append_observability(batch_df.sparkSession, state_dir,
-                                 batch_df, store.read_checkpoint(), run_id)
+                                 batch_df, run_id)
         finally:
             batch_df.unpersist()
 

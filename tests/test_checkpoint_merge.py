@@ -1,7 +1,7 @@
 """The checkpoint MERGE's physical shape and its attempt accounting:
 one exchange, one file per bucket, no write stage wider than the slots,
 checkpoint reads listed on the driver, and no-op reruns that write
-nothing but their lineage and metrics rows."""
+nothing but their metrics row."""
 
 import glob
 import os
@@ -165,16 +165,16 @@ def test_merge_attempt_accounting(spark, tmp_path):
 
 
 def test_noop_rerun_writes_no_results_or_checkpoint_file(spark, tmp_path):
-    """A rerun that claims nothing leaves results/ and checkpoint/ as
-    they were (no empty append, no MERGE) and still records itself as
-    one metrics row with total 0."""
+    """A rerun that claims nothing leaves results/, checkpoint/ and
+    lineage/ as they were (no empty append, no MERGE) and still records
+    itself as one metrics row with total 0."""
     state = str(tmp_path / "state")
     df = spark.createDataFrame(corpus.corpus_pdf(24), schema=INPUT_SCHEMA)
     run_extract_job(spark, df, state)
 
     def files():
         return {d: _parquet_files(os.path.join(state, d))
-                for d in ("results", "checkpoint")}
+                for d in ("results", "checkpoint", "lineage")}
 
     before = files()
     rep = run_extract_job(spark, df, state)

@@ -1,0 +1,138 @@
+"""A run that crashes at a commit boundary converges on rerun.
+
+Each case raises from the driver at one boundary of ``run_extract_job``
+(after the results append lands, before a bucket rename of the
+checkpoint swap, inside the lineage/metrics appends), then reruns the
+same input.  The checkpoint and the current results must then equal
+those of an uninterrupted run, no url's attempt may be counted twice,
+and no staging or backup dir may be left.  A raise at a driver boundary
+leaves the disk as a driver crash there would; task-level crashes are
+out of scope."""
+
+import glob
+import os
+import shutil
+
+import pytest
+from pyspark.sql.readwriter import DataFrameWriter
+
+from docvault_ocr_service_spark import corpus
+from docvault_ocr_service_spark.operators.checkpoint import (
+    ParquetCheckpointStore)
+from docvault_ocr_service_spark.plans.extract_job import run_extract_job
+from docvault_ocr_service_spark.schemas import INPUT_SCHEMA
+
+N_DOCS, N_SEED = 40, 20
+TABLES = ["checkpoint", "lineage", "metrics", "results"]
+
+
+class Crash(RuntimeError):
+    pass
+
+
+def _settled(spark, state):
+    store = ParquetCheckpointStore(spark, state)
+    cp = store.read_checkpoint().drop("run_id", "updated_at")
+    res = store.read_results_current().drop(
+        "run_id", "merged_at", "processing_time", "partition_id")
+    return (sorted(cp.collect(), key=lambda r: r["url"]),
+            sorted(res.collect(), key=lambda r: r["url"]))
+
+
+def _urls(spark, state):
+    cp = ParquetCheckpointStore(spark, state).read_checkpoint()
+    return {r["url"] for r in cp.select("url").collect()}
+
+
+def _renames_into(mp, seen, fail_at=None):
+    """Record the target of every ``os.rename``; raise instead of making
+    the rename numbered ``fail_at`` (0-based)."""
+    real = os.rename
+
+    def rename(src, dst):
+        if len(seen) == fail_at:
+            raise Crash(dst)
+        seen.append(dst)
+        real(src, dst)
+
+    mp.setattr(os, "rename", rename)
+
+
+def _crash_on_write(mp, table, *, after):
+    """Raise when the job writes ``table``: before the write, or once
+    the write has landed."""
+    real = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        hit = os.path.basename(path) == table
+        if hit and not after:
+            raise Crash(path)
+        real(self, path, *args, **kwargs)
+        if hit:
+            raise Crash(path)
+
+    mp.setattr(DataFrameWriter, "parquet", parquet)
+
+
+@pytest.fixture(scope="module")
+def runs(spark, tmp_path_factory):
+    """The input; a state holding a settled first half of it, and that
+    half's urls; what an uninterrupted run over the whole input leaves
+    in a copy of that state; and the targets of that run's bucket
+    renames."""
+    df = spark.createDataFrame(corpus.corpus_pdf(N_DOCS), schema=INPUT_SCHEMA)
+    root = tmp_path_factory.mktemp("crash")
+    seeded = str(root / "seeded")
+    run_extract_job(spark, df.orderBy("url").limit(N_SEED), seeded)
+    seed_urls = _urls(spark, seeded)
+    whole = str(root / "whole")
+    shutil.copytree(seeded, whole)
+    renames = []
+    with pytest.MonkeyPatch.context() as mp:
+        _renames_into(mp, renames)
+        run_extract_job(spark, df, whole)
+    return df, seeded, seed_urls, _settled(spark, whole), renames
+
+
+def _middle(renames):
+    """A rename near the middle that moves a new bucket onto a live one
+    already set aside as ``.old``: the crash between a bucket's two
+    renames."""
+    n = len(renames)
+    return next(i for i in range(n // 2, n)
+                if renames[i - 1].endswith(".old"))
+
+
+@pytest.mark.parametrize("boundary", [
+    "after_results_append", "first_rename", "middle_rename",
+    "last_rename", "inside_observability"])
+def test_crash_at_boundary_then_rerun_converges(spark, tmp_path, runs,
+                                                boundary):
+    df, seeded, seed_urls, want, renames = runs
+    state = str(tmp_path / "state")
+    shutil.copytree(seeded, state)
+    cached = spark.sparkContext._jsc.getPersistentRDDs
+    n_cached = cached().size()
+
+    with pytest.MonkeyPatch.context() as mp:
+        if boundary == "after_results_append":
+            _crash_on_write(mp, "results", after=True)
+        elif boundary == "inside_observability":
+            _crash_on_write(mp, "metrics", after=False)
+        else:
+            fail_at = {"first_rename": 0,
+                       "middle_rename": _middle(renames),
+                       "last_rename": len(renames) - 1}[boundary]
+            _renames_into(mp, [], fail_at)
+        with pytest.raises(Crash):
+            run_extract_job(spark, df, state)
+    assert cached().size() == n_cached
+    # the crash lost no settled row: the checkpoint still reads them all
+    assert _urls(spark, state) >= seed_urls
+
+    run_extract_job(spark, df, state)
+    got = _settled(spark, state)
+    assert got == want
+    assert {r["attempt"] for r in got[0]} == {1}
+    assert sorted(os.listdir(state)) == TABLES
+    assert not glob.glob(os.path.join(state, "**", "*.old"), recursive=True)

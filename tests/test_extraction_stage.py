@@ -1,7 +1,7 @@
 """The flagship job's extraction stage: one input scan, one claim, one
 routing exchange and one ``mapInPandas``; the page-explode route only
 when a giant PDF is claimed; giants placed in partitions of their
-own; and the run's staged output removed once the run is done."""
+own; and a state dir that holds only the run's tables."""
 
 import os
 import re
@@ -174,15 +174,19 @@ def test_settled_giant_pdf_rerun_claims_none_of_it(spark, tmp_path,
     assert giant["url"] in {r["url"] for r in got[1]}
 
 
-def test_runs_dir_holds_no_run_after_the_run(spark, tmp_path):
-    """The staged run output is removed once the run is done, and a
-    crashed run's leftover is removed by the next run."""
+def test_state_dir_holds_only_the_tables_after_each_run(spark, tmp_path):
+    """A run writes its output once, into the state dir's four tables:
+    no per-run copy, no staging or backup dir left behind, and the
+    cached stage released, after a first, an incremental and a no-op
+    run."""
     state = str(tmp_path / "state")
-    leftover = os.path.join(state, "runs", "crashedrun00")
-    os.makedirs(leftover)
-    open(os.path.join(leftover, "part-00000.parquet"), "wb").close()
-
+    cached = spark.sparkContext._jsc.getPersistentRDDs
     df = spark.createDataFrame(corpus.corpus_pdf(30), schema=INPUT_SCHEMA)
     for rows in (df.orderBy("url").limit(10), df, df):
+        n_cached = cached().size()
         run_extract_job(spark, rows, state)
-        assert os.listdir(os.path.join(state, "runs")) == []
+        assert cached().size() == n_cached
+        assert sorted(os.listdir(state)) == [
+            "checkpoint", "lineage", "metrics", "results"]
+        assert not [d for d in os.listdir(os.path.join(state, "checkpoint"))
+                    if d.endswith(".old")]

@@ -13,8 +13,9 @@ from docvault_ocr_service_spark.functions.udfs import run_extraction
 from docvault_ocr_service_spark.operators.checkpoint import (
     MAX_ATTEMPTS, ParquetCheckpointStore)
 from docvault_ocr_service_spark.plans.extract_job import run_extract_job
+from docvault_ocr_service_spark.operators.lineage import retry_distribution
 from docvault_ocr_service_spark.schemas import (
-    CHECKPOINT_SCHEMA, INPUT_SCHEMA)
+    CHECKPOINT_SCHEMA, INPUT_SCHEMA, LINEAGE_SCHEMA, METRICS_SCHEMA)
 
 N_ROWS = 150
 
@@ -62,8 +63,10 @@ def test_observability_tables(spark, input_df, tmp_path):
     state = str(tmp_path / "obs")
     rep = run_extract_job(spark, input_df, state)
     lineage = spark.read.parquet(f"{state}/lineage")
+    assert lineage.columns == LINEAGE_SCHEMA.fieldNames()
     assert lineage.agg(F.sum("docs_in")).first()[0] == N_ROWS
     metrics = spark.read.parquet(f"{state}/metrics")
+    assert metrics.columns == METRICS_SCHEMA.fieldNames()
     m = metrics.where(F.col("run_id") == rep.run_id).first()
     assert m["total"] == N_ROWS
     assert m["completed"] == rep.completed
@@ -109,6 +112,7 @@ def test_retryable_rows_escalate_to_permanent(spark, tmp_path):
         [("u1", datetime.now(timezone.utc), None, "x", "en")],
         schema=INPUT_SCHEMA)
     assert store.claimable(inp).count() == 0
+    assert retry_distribution(store.read_checkpoint()) == {"3": 1}
 
 
 def test_crash_duplicate_dedup(spark, input_df, tmp_path):
