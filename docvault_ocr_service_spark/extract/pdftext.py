@@ -127,13 +127,10 @@ def _stream_text(stream: bytes) -> str:
 
 def split_pdf_pages_raw(data: bytes) -> list[list[tuple[bytes, bool]]]:
     """PDF bytes → per page, the raw ``(stream_bytes, is_flate)`` content
-    parts in page-tree order — the *cheap* structural pass.
-
-    This is the scale split point: a 500-page giant becomes 500 small
-    raw-stream rows that different tasks decode, instead of one task's
-    unit of work.  Raises ``PdfParseError`` for non-PDF bytes, unsupported
-    filters, or a payload with no parseable page objects — the same
-    structural failures ``extract_pdf_pages`` raises, in the same order.
+    parts in page-tree order — the *cheap* structural pass (no inflate,
+    no text scan) of ``extract_pdf_pages``.  Raises ``PdfParseError`` for
+    non-PDF bytes, unsupported filters, or a payload with no parseable
+    page objects.
     """
     if not data.startswith(PDF_MAGIC):
         raise PdfParseError("missing %PDF- header")
@@ -226,7 +223,7 @@ def _ascii_hex_decode(stream: bytes) -> bytes:
 
 def page_text_from_raw(parts: list[tuple[bytes, bool]]) -> str:
     """One page's raw content parts → page text — the *expensive* pass
-    (inflate + text-operator scan), distributable per page."""
+    (inflate + text-operator scan) of ``extract_pdf_pages``."""
     texts: list[str] = []
     for stream, is_flate in parts:
         if is_flate:
@@ -241,10 +238,11 @@ def page_text_from_raw(parts: list[tuple[bytes, bool]]) -> str:
 def extract_pdf_pages(data: bytes) -> list[str]:
     """PDF bytes → per-page text, in page-tree order.
 
-    Composed of ``split_pdf_pages_raw`` + ``page_text_from_raw`` so the
-    whole-document kernel and the distributed page-explode route share
-    one code path — byte-identity between them holds by construction.
-    Raises ``PdfParseError`` exactly as the split/decode passes do.
+    The structural split (``split_pdf_pages_raw``) followed by each
+    page's decode (``page_text_from_raw``), all in the calling task: a
+    giant PDF is one row of the extraction stage, as in the reference
+    (``app/worker.py:254-324``).  Raises ``PdfParseError`` exactly as the
+    split/decode passes do.
     """
     return [page_text_from_raw(parts) for parts in split_pdf_pages_raw(data)]
 

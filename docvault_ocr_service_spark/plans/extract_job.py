@@ -13,11 +13,12 @@ normal rows by a salted hash over ``n`` partitions and places oversized
 rows thin in ``max(n // 4, 1)`` partitions of their own), and one
 ``mapInPandas`` extraction stage follows it.  The anti-join broadcasts
 when the checkpoint is small and sort-merges when it isn't — Catalyst's
-call.  Only when a limit-1 probe finds an oversized PDF in the claim
-does a second branch appear: the page-explode route of
-``operators/pages.py::extract_pdf_docs``, unioned after.  The only
-aggregations are that route's page reassembly and the tiny
-lineage/metrics rollups.
+call.  Oversized PDFs take the same path as every other row: the
+reference, too, extracts a PDF's pages inside one worker
+(``app/worker.py:254-324``), and the kernel's per-document finish
+(metadata and categorization over the joined text) is most of a giant
+PDF's time, so splitting its pages would not spread the work that
+counts.  The only aggregations are the tiny lineage/metrics rollups.
 
 The run's output reaches disk once, through the MERGE: the stage is
 persisted and materialized by one ``noop`` write.  A lost cached block
@@ -36,12 +37,10 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..extract.document import MAX_PAYLOAD_BYTES
 from ..functions.udfs import run_extraction
 from ..operators.checkpoint import ParquetCheckpointStore, new_run_id
 from ..operators.lineage import append_observability
-from ..operators.pages import extract_pdf_docs
-from ..operators.skew import DEFAULT_SIZE_THRESHOLD, is_oversized, route_once
+from ..operators.skew import DEFAULT_SIZE_THRESHOLD, route_once
 # not called here; perfbench's span tracer patches it by this module name
 from ..operators.skew import route_by_size  # noqa: F401
 
@@ -68,50 +67,6 @@ def is_image_payload(col: Column) -> Column:
     return out
 
 
-def giant_pdf(size_threshold: int) -> Column:
-    """An oversized PDF payload without precomputed text that the
-    admission cap lets through: the rows of the page-explode route."""
-    return (is_oversized("html", size_threshold)
-            & (F.coalesce(F.col("text"), F.lit("")) == "")
-            & (F.substring("html", 1, 5) == F.lit(b"%PDF-"))
-            & (F.octet_length("html") <= MAX_PAYLOAD_BYTES))
-
-
-def extraction_stage(input_df: DataFrame, claimed: DataFrame,
-                     n_partitions: int,
-                     size_threshold: int = DEFAULT_SIZE_THRESHOLD
-                     ) -> DataFrame:
-    """The run's RESULT_SCHEMA rows for ``claimed`` (``input_df`` after
-    the claim), planned but not executed: only the probes below run.
-
-    Every claimed row goes through one ``route_once`` exchange and one
-    ``run_extraction`` stage.  Oversized PDFs take the page-explode
-    route instead (the reference's own unit-of-work choice for big
-    documents, app/worker.py:254-324): a 500-page giant becomes 500
-    distributable page rows instead of one straggler task.  Giant HTML
-    (no page structure), admission-cap violations and precomputed-text
-    rows keep the whole-doc kernel.  The page route is only planned
-    when such a PDF is claimed.  Two ``isEmpty`` probes decide it; each
-    is a limit-1 scan that stops at the first hit and returns no column
-    to the driver.  The first reads only ``input_df`` (one pass over its
-    payload column when it holds no giant PDF, the common case); only
-    when it finds one does the second run the anti-join, so a giant PDF
-    settled by an earlier run does not bring the page route back.  The
-    probes and the stage evaluate ``input_df`` separately, so it must
-    be deterministic; were they to disagree, a giant PDF would take the
-    whole-doc kernel, whose rows equal the page route's
-    (``tests/test_pages_and_ops.py``), at a straggler's cost.
-    """
-    pdf = giant_pdf(size_threshold)
-    if input_df.where(pdf).isEmpty() or claimed.where(pdf).isEmpty():
-        return run_extraction(route_once(claimed, n_partitions,
-                                         size_threshold))
-    return (run_extraction(route_once(claimed.where(~pdf), n_partitions,
-                                      size_threshold))
-            .unionByName(extract_pdf_docs(claimed.where(pdf),
-                                          n_partitions)))
-
-
 def run_extract_job(spark: SparkSession, input_df: DataFrame,
                     state_dir: str, *, n_partitions: int | None = None,
                     size_threshold: int = DEFAULT_SIZE_THRESHOLD,
@@ -120,8 +75,8 @@ def run_extract_job(spark: SparkSession, input_df: DataFrame,
     """One resumable run over ``input_df`` (INPUT_SCHEMA shape).
 
     ``input_df`` must be deterministic (no unordered ``limit`` or
-    ``sample``): the media branch, the page-route probes and the
-    extraction stage each evaluate the claim over it.
+    ``sample``): the media branch and the extraction stage each
+    evaluate the claim over it.
 
     With ``media_dir`` set, image payloads additionally flow through the
     real decode path — features to ``media_dir/features/run=<id>`` and
@@ -174,8 +129,8 @@ def run_extract_job(spark: SparkSession, input_df: DataFrame,
         finally:
             imgs.unpersist()
 
-    extracted = extraction_stage(input_df, claimed, n_partitions,
-                                 size_threshold)
+    extracted = run_extraction(route_once(claimed, n_partitions,
+                                          size_threshold))
 
     # Materialize the run's output once, in executor storage; the write
     # also observes the run's counts and the buckets its urls hash to, so

@@ -1,10 +1,11 @@
 """A run that crashes at a commit boundary converges on rerun.
 
 Each case raises from the driver at one boundary of ``run_extract_job``
-(after the results append lands, before a bucket rename of the
-checkpoint swap, inside the lineage/metrics appends), then reruns the
-same input.  The checkpoint and the current results must then equal
-those of an uninterrupted run, no url's attempt may be counted twice,
+(after the stage's ``noop`` write, after the results append lands,
+before a bucket rename of the checkpoint swap, after the last swap,
+inside the lineage/metrics appends), then reruns the same input.  The
+checkpoint and the current results must then equal those of an
+uninterrupted run, no url's attempt may be counted twice,
 and no staging or backup dir may be left.  A raise at a driver boundary
 leaves the disk as a driver crash there would; task-level crashes are
 out of scope."""
@@ -74,6 +75,17 @@ def _crash_on_write(mp, table, *, after):
     mp.setattr(DataFrameWriter, "parquet", parquet)
 
 
+def _crash_after(mp, owner, name):
+    """Raise once ``owner.name`` has returned."""
+    real = getattr(owner, name)
+
+    def call(*args, **kwargs):
+        real(*args, **kwargs)
+        raise Crash(name)
+
+    mp.setattr(owner, name, call)
+
+
 @pytest.fixture(scope="module")
 def runs(spark, tmp_path_factory):
     """The input; a state holding a settled first half of it, and that
@@ -104,8 +116,8 @@ def _middle(renames):
 
 
 @pytest.mark.parametrize("boundary", [
-    "after_results_append", "first_rename", "middle_rename",
-    "last_rename", "inside_observability"])
+    "after_stage_write", "after_results_append", "first_rename",
+    "middle_rename", "last_rename", "after_swap", "inside_observability"])
 def test_crash_at_boundary_then_rerun_converges(spark, tmp_path, runs,
                                                 boundary):
     df, seeded, seed_urls, want, renames = runs
@@ -115,7 +127,13 @@ def test_crash_at_boundary_then_rerun_converges(spark, tmp_path, runs,
     n_cached = cached().size()
 
     with pytest.MonkeyPatch.context() as mp:
-        if boundary == "after_results_append":
+        if boundary == "after_stage_write":
+            # the stage's noop write is the job's only DataFrameWriter.save
+            _crash_after(mp, DataFrameWriter, "save")
+        elif boundary == "after_swap":
+            # merge_results returns right after its last bucket swap
+            _crash_after(mp, ParquetCheckpointStore, "merge_results")
+        elif boundary == "after_results_append":
             _crash_on_write(mp, "results", after=True)
         elif boundary == "inside_observability":
             _crash_on_write(mp, "metrics", after=False)

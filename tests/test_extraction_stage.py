@@ -1,24 +1,26 @@
 """The flagship job's extraction stage: one input scan, one claim, one
-routing exchange and one ``mapInPandas``; the page-explode route only
-when a giant PDF is claimed; giants placed in partitions of their
-own; and a state dir that holds only the run's tables."""
+routing exchange and one ``mapInPandas`` for every row, giant PDFs
+included, with no Spark job before the stage's write; giants placed in
+partitions of their own and extracted as the whole-doc kernel does;
+and a state dir that holds only the run's tables."""
 
 import os
 import re
+import uuid
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.readwriter import DataFrameWriter
 
 from docvault_ocr_service_spark import corpus
+from docvault_ocr_service_spark.extract import extract_document
 from docvault_ocr_service_spark.operators.checkpoint import (
     ParquetCheckpointStore)
 from docvault_ocr_service_spark.operators.skew import (
     giant_partitions, is_oversized, route_once)
-from docvault_ocr_service_spark.plans import extract_job
-from docvault_ocr_service_spark.plans.extract_job import (
-    extraction_stage, giant_pdf, run_extract_job)
+from docvault_ocr_service_spark.plans.extract_job import run_extract_job
 from docvault_ocr_service_spark.schemas import INPUT_SCHEMA
 
 _ADAPTIVE = "spark.sql.adaptive.enabled"
@@ -57,22 +59,58 @@ def _frame(spark, rows, schema=INPUT_SCHEMA):
     return spark.createDataFrame(pd.DataFrame(rows), schema=schema)
 
 
-def test_stage_plan_is_one_scan_one_claim_one_exchange(spark, tmp_path, aqe):
-    """No giant PDF in the input: the stage plans exactly one input scan,
-    one checkpoint scan, the claim's broadcast, the routing exchange and
-    one Python map — no second branch re-planning the claim."""
+def _seeded_input(spark, tmp_path, extra=()):
+    """A parquet input of 40 corpus docs plus ``extra`` rows, and a state
+    dir holding a settled first half of the corpus docs."""
     path = str(tmp_path / "input")
-    spark.createDataFrame(corpus.corpus_pdf(40), schema=INPUT_SCHEMA) \
-        .write.parquet(path)
+    docs = spark.createDataFrame(corpus.corpus_pdf(40), schema=INPUT_SCHEMA)
+    inp = docs.unionByName(_frame(spark, list(extra))) if extra else docs
+    inp.write.parquet(path)
     df = spark.read.schema(INPUT_SCHEMA).parquet(path)
-    assert df.where(giant_pdf(extract_job.DEFAULT_SIZE_THRESHOLD)) \
-        .count() == 0
     state = str(tmp_path / "state")
-    run_extract_job(spark, df.orderBy("url").limit(20), state)
+    run_extract_job(spark, docs.orderBy("url").limit(20), state)
+    return df, state
 
-    aqe(False)
-    claimed = ParquetCheckpointStore(spark, state).claimable(df)
-    plan = _executed_plan(extraction_stage(df, claimed, 4))
+
+def _run_watched(spark, monkeypatch, df, state, **opts):
+    """Run the job over ``df``; return the extraction stage it planned
+    (the frame its write observes) and the Spark jobs it started before
+    that ``noop`` write."""
+    sc = spark.sparkContext
+    group = f"extraction-stage-{uuid.uuid4().hex}"
+    stages, early = [], []
+    frame = type(df)
+    observe, save = frame.observe, DataFrameWriter.save
+
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+        return set(sc.statusTracker().getJobIdsForGroup(group))
+
+    def spy_observe(self, *args, **kwargs):
+        stages.append(self)
+        return observe(self, *args, **kwargs)
+
+    def spy_save(self, *args, **kwargs):
+        early.append(jobs())
+        return save(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "observe", spy_observe)
+    monkeypatch.setattr(DataFrameWriter, "save", spy_save)
+    sc.setJobGroup(group, "extraction stage")
+    try:
+        run_extract_job(spark, df, state, **opts)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(stages) == len(early) == 1
+    return stages[0], early[0]
+
+
+def _assert_single_stage_plan(stage):
+    """One input scan, one checkpoint scan, the claim's broadcast, the
+    routing exchange and one Python map — no second branch re-planning
+    the claim."""
+    plan = _executed_plan(stage)
     scans = [line for line in plan.splitlines() if "FileScan" in line]
     assert len([s for s in scans if "html#" in s]) == 1, plan
     assert len([s for s in scans if "status#" in s]) == 1, plan
@@ -83,14 +121,30 @@ def test_stage_plan_is_one_scan_one_claim_one_exchange(spark, tmp_path, aqe):
     assert plan.count("MapInPandas") == 1, plan
 
 
-def test_stage_plan_with_giant_pdf_has_page_route(spark, aqe):
-    df = _frame(spark, _small_rows(10) + [_giant_pdf_row()])
+def test_stage_plan_is_one_scan_one_claim_one_exchange(spark, tmp_path, aqe,
+                                                       monkeypatch):
+    """The AQE-off plan of an incremental run's stage is the single
+    plan, and the run starts no Spark job before the stage's write."""
+    df, state = _seeded_input(spark, tmp_path)
     aqe(False)
-    plan = _executed_plan(extraction_stage(df, df, 4, _GIANT))
-    # whole-doc kernel + page explode, page decode and per-doc finish
-    assert plan.count("MapInPandas") == 4, plan
-    assert re.search(r"Exchange hashpartitioning\(url#\d+, page_no#", plan)
-    assert "collect_list" in plan
+    stage, early = _run_watched(spark, monkeypatch, df, state)
+    _assert_single_stage_plan(stage)
+    assert early == set()
+
+
+def test_stage_plan_with_giant_pdf_is_the_single_plan(spark, tmp_path, aqe,
+                                                      monkeypatch):
+    """A claimed giant PDF changes nothing: the stage plans the same
+    single plan and the run probes nothing before the stage's write."""
+    giant = _giant_pdf_row()
+    df, state = _seeded_input(spark, tmp_path, [giant])
+    aqe(False)
+    stage, early = _run_watched(spark, monkeypatch, df, state,
+                                size_threshold=_GIANT)
+    _assert_single_stage_plan(stage)
+    assert early == set()
+    cp = ParquetCheckpointStore(spark, state).read_checkpoint()
+    assert cp.where(F.col("url") == giant["url"]).first()["status"] == "done"
 
 
 def test_routing_exchange_places_giants_apart(spark, aqe):
@@ -137,12 +191,10 @@ def _settled(store):
             sorted(res.collect(), key=lambda r: r["url"]))
 
 
-def test_settled_giant_pdf_rerun_claims_none_of_it(spark, tmp_path,
-                                                   monkeypatch):
-    """The run that claims a giant PDF takes the page route; a rerun whose
-    input still holds it, already settled, claims none of it and plans
-    no page route, and the state equals that of one uninterrupted run
-    over the whole input."""
+def test_settled_giant_pdf_rerun_claims_none_of_it(spark, tmp_path):
+    """A rerun whose input still holds a giant PDF that an earlier run
+    settled claims none of it, and the state equals that of one
+    uninterrupted run over the whole input."""
     giant = _giant_pdf_row()
     rows = _small_rows(20) + [giant]
     opts = dict(n_partitions=8, size_threshold=_GIANT)
@@ -150,28 +202,58 @@ def test_settled_giant_pdf_rerun_claims_none_of_it(spark, tmp_path,
     whole = str(tmp_path / "whole")
     run_extract_job(spark, _frame(spark, rows), whole, **opts)
 
-    routed = []
-    page_route = extract_job.extract_pdf_docs
-
-    def spy(df, n_partitions=None):
-        routed.append(df)
-        return page_route(df, n_partitions)
-
-    monkeypatch.setattr(extract_job, "extract_pdf_docs", spy)
     split = str(tmp_path / "split")
     first = run_extract_job(spark, _frame(spark, rows[10:]), split, **opts)
     assert first.claimed == 11
-    assert len(routed) == 1
 
     rerun = run_extract_job(spark, _frame(spark, rows), split, **opts)
     assert rerun.claimed == 10
-    assert len(routed) == 1
 
     want = _settled(ParquetCheckpointStore(spark, whole))
     got = _settled(ParquetCheckpointStore(spark, split))
     assert got == want
     assert {r["attempt"] for r in got[0]} == {1}
     assert giant["url"] in {r["url"] for r in got[1]}
+
+
+def _encrypted(pdf: bytes) -> bytes:
+    return pdf.replace(b"/Type /Catalog /Pages 2 0 R",
+                       b"/Type /Catalog /Pages 2 0 R /Encrypt 99 0 R", 1)
+
+
+def test_oversized_pdf_verdicts_equal_the_kernel(spark, tmp_path):
+    """A failing PDF's checkpoint verdict does not depend on its size:
+    oversized encrypted (no native text; an unsupported stream filter),
+    scant and truncated PDFs settle exactly as ``extract_document``
+    judges them."""
+    text = [f"Page {i} of a long report with enough words to count."
+            for i in range(200)]
+    prose = corpus.make_pdf(text)
+    payloads = {
+        "https://enc.example/blank": _encrypted(corpus.make_pdf([" "] * 200)),
+        "https://enc.example/filter": _encrypted(prose.replace(
+            b">>\nstream", b"/Filter /LZWDecode >>\nstream", 1)),
+        "https://scant.example/blank": corpus.make_pdf([" "] * 200),
+        "https://bad.example/truncated": prose[:2 * len(prose) // 3],
+    }
+    assert min(map(len, payloads.values())) > _GIANT
+    rows = _small_rows(10) + [
+        {"url": url, "warc_ts": None, "html": html, "text": None,
+         "lang": "en"} for url, html in payloads.items()]
+    state = str(tmp_path / "state")
+    run_extract_job(spark, _frame(spark, rows), state, n_partitions=4,
+                    size_threshold=_GIANT)
+
+    cp = ParquetCheckpointStore(spark, state).read_checkpoint()
+    got = {r["url"]: (r["status"], r["error_kind"], r["error_msg"])
+           for r in cp.where(F.col("url").isin(list(payloads))).collect()}
+    want = {}
+    for url, html in payloads.items():
+        k = extract_document(url, html, None, "en")
+        want[url] = (k["status"], k["error_kind"], k["error_msg"])
+    assert got == want
+    assert {v[:2] for u, v in got.items() if "enc.example" in u} \
+        == {("failed_permanent", "encrypted_pdf")}
 
 
 def test_state_dir_holds_only_the_tables_after_each_run(spark, tmp_path):

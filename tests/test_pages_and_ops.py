@@ -1,52 +1,13 @@
-"""Page-explode route byte-identity + batch-status/error/cleanup ops."""
+"""A giant PDF through the flagship job + batch-status/error/cleanup
+ops."""
 
 from datetime import datetime, timedelta, timezone
-
-import pytest
-from pyspark.sql import functions as F
 
 from docvault_ocr_service_spark import corpus
 from docvault_ocr_service_spark.extract import extract_document
 from docvault_ocr_service_spark.operators.lineage import (
     batch_status, error_summary)
-from docvault_ocr_service_spark.operators.pages import (
-    explode_pdf_pages, reassemble_pages)
-from docvault_ocr_service_spark.schemas import INPUT_SCHEMA
-
-
-@pytest.fixture(scope="module")
-def pdf_rows(spark):
-    rows = [corpus.generate_row(i) for i in range(400)
-            if corpus.template_for(i) in ("pdf_native", "multipage_pdf")]
-    import pandas as pd
-
-    return spark.createDataFrame(pd.DataFrame(rows), schema=INPUT_SCHEMA)
-
-
-def test_exploded_route_is_byte_identical(spark, pdf_rows):
-    """A1 as a distributed aggregation == the in-kernel page join."""
-    pages = explode_pdf_pages(pdf_rows.repartition(8))
-    docs = reassemble_pages(pages)
-    got = {r["url"]: (r["text"], r["page_count"])
-           for r in docs.collect()}
-    for row in pdf_rows.collect():
-        want = extract_document(row["url"], row["html"], row["text"],
-                                row["lang"])
-        assert got[row["url"]][0] == want["text"]
-        assert got[row["url"]][1] == want["page_count"]
-
-
-def test_explode_handles_corrupt_pdf(spark):
-    import pandas as pd
-
-    bad = spark.createDataFrame(pd.DataFrame([{
-        "url": "u://bad", "warc_ts": None,
-        "html": b"%PDF-1.4 truncated", "text": None, "lang": "en"}]),
-        schema=INPUT_SCHEMA)
-    docs = reassemble_pages(explode_pdf_pages(bad))
-    row = docs.first()
-    assert row["text"] is None
-    assert row["error_kind"].startswith("corrupted_file")
+from docvault_ocr_service_spark.schemas import INPUT_SCHEMA, RESULT_SCHEMA
 
 
 def test_batch_status_pivot(spark):
@@ -115,72 +76,22 @@ def test_asof_join_semantics(spark):
     assert out["d"] is None        # right row is in the future
 
 
-def _drop_volatile(row):
+# columns that vary per run (the store's run stamps, wall time) or per
+# layout (the task that extracted the row)
+_VOLATILE = ("run_id", "merged_at", "processing_time", "partition_id")
+
+
+def _stable(row):
     d = row.asDict(recursive=True)
-    d.pop("processing_time", None)
-    d.pop("partition_id", None)
+    for k in _VOLATILE:
+        d.pop(k, None)
     return d
 
 
-def test_extract_pdf_docs_matches_whole_doc_kernel(spark, pdf_rows):
-    """The two-stage page route yields RESULT_SCHEMA rows identical to
-    run_extraction (same kernels by construction — pinned here)."""
-    from docvault_ocr_service_spark.functions.udfs import run_extraction
-    from docvault_ocr_service_spark.operators.pages import extract_pdf_docs
-
-    want = {r["url"]: _drop_volatile(r)
-            for r in run_extraction(pdf_rows).collect()}
-    got = {r["url"]: _drop_volatile(r)
-           for r in extract_pdf_docs(pdf_rows, n_partitions=8).collect()}
-    assert set(got) == set(want)
-    for url, row in got.items():
-        assert row == want[url], url
-
-
-def test_extract_pdf_docs_scant_and_corrupt(spark):
-    """ocr_unavailable and corrupted_file taxonomy survives the route."""
-    import pandas as pd
-
-    from docvault_ocr_service_spark.operators.pages import extract_pdf_docs
-
-    rows = [
-        {"url": "u://scant", "warc_ts": None,
-         "html": corpus.make_pdf(["tiny"]), "text": None, "lang": "en"},
-        {"url": "u://bad", "warc_ts": None,
-         "html": b"%PDF-1.4 truncated", "text": None, "lang": "en"},
-    ]
-    df = spark.createDataFrame(pd.DataFrame(rows), schema=INPUT_SCHEMA)
-    got = {r["url"]: r for r in extract_pdf_docs(df, 4).collect()}
-    assert got["u://scant"]["error_kind"] == "ocr_unavailable"
-    assert got["u://scant"]["status"] == "failed_permanent"
-    assert got["u://bad"]["error_kind"] == "corrupted_file"
-
-
-def test_giant_pdf_pages_spread_across_partitions(spark):
-    """One 120-page giant must not stay one task's unit of work: after
-    the (url, page_no) repartition its pages occupy many partitions."""
-    import pandas as pd
-
-    from docvault_ocr_service_spark.operators.pages import (
-        decode_pages, explode_pdf_pages_raw)
-
-    pages = [f"Giant page {i} with some body text to extract " * 30
-             for i in range(120)]
-    df = spark.createDataFrame(pd.DataFrame([{
-        "url": "u://giant", "warc_ts": None,
-        "html": corpus.make_pdf(pages, compress=True),
-        "text": None, "lang": "en"}]), schema=INPUT_SCHEMA)
-    raw = explode_pdf_pages_raw(df).repartition(8, "url", "page_no")
-    decoded = decode_pages(raw)
-    parts = (decoded.select(F.spark_partition_id().alias("pid"))
-             .distinct().count())
-    assert parts >= 6, "giant's pages still concentrated in few tasks"
-    assert decoded.count() == 120
-
-
-def test_job_routes_giant_pdf_through_page_explode(spark, tmp_path):
-    """Flagship-job parity: a multipage giant goes through the explode
-    route and its stored result matches the whole-doc kernel."""
+def test_job_extracts_giant_pdf_like_the_kernel(spark, tmp_path):
+    """Flagship-job parity: a multipage giant PDF, routed to a partition
+    of its own, is stored exactly as the whole-doc kernel extracts it —
+    every column but the volatile ones."""
     import pandas as pd
 
     from docvault_ocr_service_spark.operators.checkpoint import (
@@ -205,10 +116,12 @@ def test_job_routes_giant_pdf_through_page_explode(spark, tmp_path):
     assert report.failed == 0
 
     store = ParquetCheckpointStore(spark, str(tmp_path / "state"))
-    res = {r["url"]: r for r in store.read_results_current().collect()}
-    giant = res["https://giant.example/pdf"]
-    want = extract_document("https://giant.example/pdf", giant_pdf,
-                            None, "en")
-    assert giant["text"] == want["text"]
-    assert giant["page_count"] == 40
-    assert giant["source"] == "native_pdf"
+    giant = (store.read_results_current()
+             .where("url = 'https://giant.example/pdf'").collect())
+    # the kernel's dict, typed as the results table types it
+    want = spark.createDataFrame(
+        [extract_document("https://giant.example/pdf", giant_pdf, None,
+                          "en")], RESULT_SCHEMA).collect()
+    assert [_stable(r) for r in giant] == [_stable(r) for r in want]
+    assert giant[0]["page_count"] == 40
+    assert giant[0]["source"] == "native_pdf"
