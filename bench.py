@@ -205,7 +205,7 @@ def extract_once(cores: int, reps: int = SCALE_REPS) -> dict:
     for startup.  Then best-of-``reps`` timed passes (shared-host noise
     is ±20-40 %; max is the least-contended estimate)."""
     from docvault_ocr_service_spark.functions.udfs import run_extraction
-    from docvault_ocr_service_spark.operators.skew import route_by_size
+    from docvault_ocr_service_spark.operators.skew import route_once
     from docvault_ocr_service_spark.schemas import INPUT_SCHEMA
 
     slots = _reserved_slots(cores)
@@ -213,8 +213,8 @@ def extract_once(cores: int, reps: int = SCALE_REPS) -> dict:
     from pyspark.sql import functions as F
 
     df = spark.read.schema(INPUT_SCHEMA).parquet(BENCH_CORPUS_DIR)
-    normal, giants = route_by_size(df, slots * 2)
-    out = run_extraction(normal).unionByName(run_extraction(giants))
+    # the flagship job's stage: one exchange, one extraction
+    out = run_extraction(route_once(df, slots * 2))
     out.count()  # warm pass: workers up, modules imported, scan cached
     best = None
     for _ in range(max(reps, 1)):

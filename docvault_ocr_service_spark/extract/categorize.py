@@ -11,6 +11,15 @@ Canonicalization vs the reference: argmax ties break by *lexicographic
 category name* (the reference iterates a hash-seed-ordered set —
 ``:71-76`` — so its tie-break is nondeterministic; its tests only cover
 clear winners).
+
+Gate rule of the hot path (``categorize_fast``): each category regex
+carries the prefilter ``prefilter.Gated`` derives from its parse tree,
+the only gate.  A regex is searched only when the text's gate text (its
+lowercase, with what ``re.IGNORECASE`` folds together mapped to one
+character, so sound on any text, ASCII or not) holds a literal of every
+clause; one whose matches all start at a known literal is tried with
+``match`` at those offsets only.  ``categorize_detailed`` searches every
+regex and is the differential oracle (``tests/test_prefilter.py``).
 """
 
 from __future__ import annotations
@@ -19,6 +28,7 @@ import re
 from dataclasses import dataclass, field
 
 from . import patterns as P
+from .prefilter import Gated, Scan
 
 # Precompiled per-category tables: (name, lowered keywords, compiled regexes)
 _CATEGORY_TABLE: tuple[tuple[str, tuple[str, ...], tuple[re.Pattern, ...]], ...] = tuple(
@@ -30,30 +40,9 @@ _CATEGORY_TABLE: tuple[tuple[str, tuple[str, ...], tuple[re.Pattern, ...]], ...]
     for name, (kws, pats) in P.CATEGORIES.items()
 )
 
-_LITERAL_PREFIX_RE = re.compile(r"^(?:\\b)?([a-ząćęłńóśźż]{3,})")
-
-
-def _mandatory_literal(pattern: str) -> str | None:
-    """A lowercase literal the pattern cannot match without, or None.
-
-    Only a leading literal run is extracted (before any regex metachar),
-    and only when the following metachar cannot make its last character
-    optional — a conservative rule, verified by the parity fuzz tests.
-    """
-    m = _LITERAL_PREFIX_RE.match(pattern)
-    if not m:
-        return None
-    lit = m.group(1)
-    rest = pattern[m.end():]
-    if rest[:1] in ("?", "*", "{"):  # last char may be optional → shrink
-        lit = lit[:-1]
-    return lit if len(lit) >= 3 else None
-
-
-# (name, keywords, [(literal_gate, regex), ...]) for the fast scorer
+# (name, keywords, gated regexes) for the fast scorer
 _CATEGORY_FAST_TABLE = tuple(
-    (name, keywords,
-     tuple((_mandatory_literal(rx.pattern), rx) for rx in regexes))
+    (name, keywords, tuple(Gated(rx) for rx in regexes))
     for name, keywords, regexes in _CATEGORY_TABLE
 )
 
@@ -113,35 +102,38 @@ while _PAT_SAT * PATTERN_WEIGHT < PATTERN_CAP:
     _PAT_SAT += 1
 
 
-def _category_score_fast(text: str, text_lower: str,
-                         keywords: tuple[str, ...],
-                         gated_regexes, gates_sound: bool = True) -> float:
-    """Score only (no indicators), short-circuiting at the weight caps
-    and skipping regexes whose mandatory literal is absent — numerically
-    identical to category_score()[0].
+def _fast_score(kw_hits: int, pat_hits: int) -> float:
+    """category_score()'s arithmetic; non-decreasing in both counts."""
+    score = min(kw_hits * KEYWORD_WEIGHT, KEYWORD_CAP)
+    score += min(pat_hits * PATTERN_WEIGHT, PATTERN_CAP)
+    return min(score, 1.0)
 
-    ``gates_sound`` must be False for non-ASCII text: re.IGNORECASE
-    case-folds some non-ASCII uppercase (Turkish 'İ' matches 'i') that
-    str.lower() maps to multi-char sequences, so the literal gate would
-    wrongly skip a regex that matches.
-    """
+
+def _category_score_fast(scan: Scan, keywords: tuple[str, ...],
+                         gated: tuple[Gated, ...], beat: float) -> float:
+    """category_score()[0] when that is above ``beat``, else some value
+    not above ``beat``: no indicators, counting stops at the weight
+    caps, and a category that cannot score above ``beat`` even if every
+    keyword or pattern left hit stops early.  A regex runs only when its
+    prefilter admits the text."""
+    if _fast_score(len(keywords), len(gated)) <= beat:
+        return beat
+    text_lower = scan.lower
     kw_hits = 0
     for kw in keywords:
         if kw in text_lower:
             kw_hits += 1
             if kw_hits >= _KW_SAT:
                 break
-    score = min(kw_hits * KEYWORD_WEIGHT, KEYWORD_CAP)
+    if _fast_score(kw_hits, len(gated)) <= beat:
+        return beat
     pat_hits = 0
-    for lit, rx in gated_regexes:
-        if gates_sound and lit is not None and lit not in text_lower:
-            continue
-        if rx.search(text):
+    for g in gated:
+        if g.search(scan):
             pat_hits += 1
             if pat_hits >= _PAT_SAT:
                 break
-    score += min(pat_hits * PATTERN_WEIGHT, PATTERN_CAP)
-    return min(score, 1.0)
+    return _fast_score(kw_hits, pat_hits)
 
 
 def detect_languages(text_lower: str) -> list[str]:
@@ -202,20 +194,21 @@ def categorize_fast(text: str) -> tuple[str, float, list[str]]:
     """Hot-path categorization → (primary, confidence, detected_langs).
 
     Numerically identical to categorize_detailed (same scores, same
-    tie-break, same threshold) but skips indicator bookkeeping and
-    short-circuits scoring at the weight caps.  Pinned equal by tests.
+    tie-break, same threshold) but skips indicator bookkeeping,
+    short-circuits scoring at the weight caps, skips a category that
+    cannot beat the best score so far, and runs a regex only when its
+    prefilter admits the text (prefilter.py: the one gate, sound on any
+    text).  Pinned equal by tests.
     """
     if not text or len(text.strip()) < 3:
         return "unknown", 0.0, []
 
-    text_lower = text.lower()
-    gates_sound = text.isascii()
+    scan = Scan(text)
     best_name = "unknown"
     best_score = -1.0
     for name, keywords, gated in _CATEGORY_FAST_TABLE:
-        score = _category_score_fast(text, text_lower, keywords, gated,
-                                     gates_sound)
+        score = _category_score_fast(scan, keywords, gated, best_score)
         if score > best_score:  # table is in sorted name order → lex ties
             best_name, best_score = name, score
     primary = best_name if best_score >= UNKNOWN_THRESHOLD else "unknown"
-    return primary, best_score, detect_languages(text_lower)
+    return primary, best_score, detect_languages(scan.lower)

@@ -233,6 +233,8 @@ def decode_jpeg(data: bytes) -> np.ndarray:
         # T.81 B.1.1.2: any number of 0xFF fill bytes may precede a marker
         while pos + 1 < len(data) and data[pos + 1] == 0xFF:
             pos += 1
+        if pos + 1 >= len(data):
+            raise ImageDecodeError("truncated marker")
         marker = data[pos + 1]
         pos += 2
         if marker == 0xD9:                      # EOI

@@ -17,29 +17,51 @@ reference exactly: pattern-union order (en then pl), duplicates included.
 All regexes are precompiled once at import; extraction is a per-string
 function meant to be mapped over an Arrow batch (``pd.Series``) inside a
 pandas UDF — the per-batch loop lives in ``functions/udfs.py``.
+
+Gate rule: each pattern carries the prefilter ``prefilter.Gated`` derives
+from its parse tree, and that is the only gate.  A pattern runs only when
+the text's gate text (its lowercase, with what ``re.IGNORECASE`` folds
+together mapped to one character, so sound on any text, ASCII or not)
+holds every literal clause and, where every match needs one, a digit; a
+pattern whose every match starts at a digit or a known literal is tried
+with ``match`` at those offsets only.  The output equals a plain
+``finditer`` pass over every pattern; ``tests/test_prefilter.py`` checks
+that differentially.
 """
 
 from __future__ import annotations
 
 import re
 from datetime import date
+from functools import lru_cache
 
 from dateutil import parser as _dateutil_parser
 
 from . import patterns as P
+from .prefilter import Gated, Scan
+
 
 # Precompiled pattern tables (module-level: compiled once per executor
-# process, shared across every Arrow batch that worker handles).
-_DATE_RES = tuple(re.compile(p, re.IGNORECASE) for p in P.DATE_PATTERNS)
-_AMOUNT_RES = tuple(re.compile(p, re.IGNORECASE) for p in P.AMOUNT_PATTERNS)
-_PHONE_RES = tuple(re.compile(p) for p in P.PHONE_PATTERNS)
-_POSTAL_RES = tuple(re.compile(p) for p in P.POSTAL_PATTERNS)
-_INVOICE_RES = tuple(re.compile(p, re.IGNORECASE) for p in P.INVOICE_PATTERNS)
-_PO_RES = tuple(re.compile(p, re.IGNORECASE) for p in P.PO_PATTERNS)
-_TAX_RES = tuple(re.compile(p, re.IGNORECASE) for p in P.TAX_ID_PATTERNS)
-_ADDRESS_RES = tuple(re.compile(p) for p in P.ADDRESS_PATTERNS)
-_EMAIL_RE = re.compile(P.EMAIL_PATTERN)
-_NAME_RE = re.compile(P.NAME_PATTERN)
+# process, shared across every Arrow batch that worker handles), each
+# pattern with its prefilter (prefilter.py).
+def _gated(patterns, flags: int = 0) -> tuple[Gated, ...]:
+    return tuple(Gated(re.compile(p, flags)) for p in patterns)
+
+
+# DATE_PATTERNS repeats the ISO and numeric patterns (en + pl); each
+# distinct one is scanned once and its matches replayed in _DATE_ORDER.
+_DATE_UNIQUE = tuple(dict.fromkeys(P.DATE_PATTERNS))
+_DATE_RES = _gated(_DATE_UNIQUE, re.IGNORECASE)
+_DATE_ORDER = tuple(_DATE_UNIQUE.index(p) for p in P.DATE_PATTERNS)
+_AMOUNT_RES = _gated(P.AMOUNT_PATTERNS, re.IGNORECASE)
+_PHONE_RES = _gated(P.PHONE_PATTERNS)
+_POSTAL_RES = _gated(P.POSTAL_PATTERNS)
+_INVOICE_RES = _gated(P.INVOICE_PATTERNS, re.IGNORECASE)
+_PO_RES = _gated(P.PO_PATTERNS, re.IGNORECASE)
+_TAX_RES = _gated(P.TAX_ID_PATTERNS, re.IGNORECASE)
+_ADDRESS_RES = _gated(P.ADDRESS_PATTERNS)
+(_EMAIL_RE,) = _gated((P.EMAIL_PATTERN,))
+(_NAME_RE,) = _gated((P.NAME_PATTERN,))
 
 # Flat output schema (field order is the Spark StructType order).
 METADATA_FIELDS: tuple[str, ...] = (
@@ -47,24 +69,6 @@ METADATA_FIELDS: tuple[str, ...] = (
     "postal_codes", "invoice_numbers", "po_numbers", "tax_ids",
     "date_contexts", "amount_labels", "name_contexts", "confidence",
 )
-
-
-# Prefilter gates: every date/amount/phone/postal/tax/address pattern
-# requires at least one ASCII digit, the name pattern an uppercase
-# letter, the email pattern an '@' — cheap scans that let digit-free
-# noise documents skip ~40 regex passes with provably identical output.
-_DIGIT_RE = re.compile(r"\d")
-_UPPER_RE = re.compile(r"[A-Z]")
-# invoice/po patterns cannot match without one of these literals
-# (IGNORECASE → check on the lowered text).  The gate is only sound on
-# pure-ASCII text: re.IGNORECASE case-folds some non-ASCII uppercase
-# (e.g. Turkish 'İ' matches 'i') that str.lower() maps to a multi-char
-# sequence ('i' + U+0307), so 'inv' would be absent from text.lower()
-# while the regex still matches — non-ASCII text skips the gate.
-_INVOICE_GATES = ("invoice", "inv", "faktura", "fakt", "fv", "fs")
-_PO_GATES = ("po", "p.o.", "purchase order", "zamówienie", "zam")
-
-from functools import lru_cache  # noqa: E402
 
 
 @lru_cache(maxsize=65536)
@@ -88,20 +92,27 @@ def _tail_context(text: str, pos: int, window: int, keep: int) -> str:
     return ctx[-keep:] if len(ctx) > keep else ctx
 
 
-def extract_dates(text: str) -> tuple[list[date], list[str]]:
+def extract_dates(scan: Scan) -> tuple[list[date], list[str]]:
     """Dates (1900..2100) + 50/30-char contexts, in pattern-union order.
 
     Reference: app/metadata_extractor_v2.py:148-175.  Duplicate matches are
     intentional (the ISO/numeric patterns appear once per language).
     """
-    found: list[date] = []
-    contexts: list[str] = []
-    for rx in _DATE_RES:
-        for m in rx.finditer(text):
+    text = scan.text
+    hits: list[list[tuple[date, str]]] = []
+    for g in _DATE_RES:
+        got = []
+        for m in g.finditer(scan):
             parsed = _parse_date_cached(m.group(0))
             if parsed is not None and 1900 <= parsed.year <= 2100:
-                found.append(parsed)
-                contexts.append(_tail_context(text, m.start(), 50, 30))
+                got.append((parsed, _tail_context(text, m.start(), 50, 30)))
+        hits.append(got)
+    found: list[date] = []
+    contexts: list[str] = []
+    for i in _DATE_ORDER:
+        for parsed, ctx in hits[i]:
+            found.append(parsed)
+            contexts.append(ctx)
     return found, contexts
 
 
@@ -128,7 +139,7 @@ def _normalize_amount(raw: str) -> float:
     return float(s)
 
 
-def extract_amounts(text: str) -> tuple[list[float], list[str]]:
+def extract_amounts(scan: Scan) -> tuple[list[float], list[str]]:
     """Currency-adjacent amounts in (0, 1e9) + 30/20-char labels.
 
     Reference: app/metadata_extractor_v2.py:177-226 (two patterns: symbol
@@ -136,26 +147,26 @@ def extract_amounts(text: str) -> tuple[list[float], list[str]]:
     """
     amounts: list[float] = []
     labels: list[str] = []
-    for rx in _AMOUNT_RES:
-        for m in rx.finditer(text):
+    for g in _AMOUNT_RES:
+        for m in g.finditer(scan):
             try:
                 value = _normalize_amount(m.group(1))
             except (ValueError, IndexError):
                 continue
             if 0 < value < 1_000_000_000:
                 amounts.append(value)
-                labels.append(_tail_context(text, m.start(), 30, 20))
+                labels.append(_tail_context(scan.text, m.start(), 30, 20))
     return amounts, labels
 
 
-def extract_names(text: str) -> tuple[list[str], list[str]]:
+def extract_names(scan: Scan) -> tuple[list[str], list[str]]:
     """Capitalized 2–4 word runs, titles stripped, len>3 + contexts.
 
     Reference: app/metadata_extractor_v2.py:228-252.
     """
     names: list[str] = []
     contexts: list[str] = []
-    for m in _NAME_RE.finditer(text):
+    for m in _NAME_RE.finditer(scan):
         parts = [
             w.rstrip(".") for w in m.group(0).split()
             if w.rstrip(".") not in P.NAME_TITLES
@@ -163,43 +174,20 @@ def extract_names(text: str) -> tuple[list[str], list[str]]:
         cleaned = " ".join(parts)
         if cleaned and len(cleaned) > 3:
             names.append(cleaned)
-            contexts.append(_tail_context(text, m.start(), 30, 20))
+            contexts.append(_tail_context(scan.text, m.start(), 30, 20))
     return names, contexts
 
 
-def _sorted_unique_matches(res: tuple[re.Pattern, ...], text: str) -> list[str]:
-    hits: set[str] = set()
-    for rx in res:
-        hits.update(rx.findall(text))
-    return sorted(hits)
+def _found(m: re.Match):
+    """What ``findall`` reports for one match."""
+    if not m.re.groups:
+        return m.group(0)
+    groups = m.groups("")
+    return groups[0] if len(groups) == 1 else groups
 
 
-def extract_emails(text: str) -> list[str]:
-    return sorted(set(_EMAIL_RE.findall(text)))
-
-
-def extract_phones(text: str) -> list[str]:
-    return _sorted_unique_matches(_PHONE_RES, text)
-
-
-def extract_invoice_numbers(text: str) -> list[str]:
-    return _sorted_unique_matches(_INVOICE_RES, text)
-
-
-def extract_po_numbers(text: str) -> list[str]:
-    return _sorted_unique_matches(_PO_RES, text)
-
-
-def extract_postal_codes(text: str) -> list[str]:
-    return _sorted_unique_matches(_POSTAL_RES, text)
-
-
-def extract_addresses(text: str) -> list[str]:
-    return _sorted_unique_matches(_ADDRESS_RES, text)
-
-
-def extract_tax_ids(text: str) -> list[str]:
-    return _sorted_unique_matches(_TAX_RES, text)
+def _sorted_unique_matches(res: tuple[Gated, ...], scan: Scan) -> list:
+    return sorted({_found(m) for g in res for m in g.finditer(scan)})
 
 
 def metadata_confidence(md: dict) -> float:
@@ -238,39 +226,21 @@ def extract_metadata(text: str) -> dict:
     empty value for that field (the reference swallows at the extract()
     level, app/metadata_extractor_v2.py:405-407).
     """
-    text = text or ""
-    has_digit = _DIGIT_RE.search(text) is not None
-    has_upper = _UPPER_RE.search(text) is not None
-    if has_digit:
-        dates, date_ctx = extract_dates(text)
-        amounts, amount_labels = extract_amounts(text)
-        phones = extract_phones(text)
-        postal = extract_postal_codes(text)
-        tax_ids = extract_tax_ids(text)
-        addresses = extract_addresses(text)
-    else:
-        dates, date_ctx = [], []
-        amounts, amount_labels = [], []
-        phones, postal, tax_ids, addresses = [], [], [], []
-    names, name_ctx = extract_names(text) if has_upper else ([], [])
-    text_lower = text.lower()
-    gates_sound = text.isascii()
+    scan = Scan(text or "")
+    dates, date_ctx = extract_dates(scan)
+    amounts, amount_labels = extract_amounts(scan)
+    names, name_ctx = extract_names(scan)
     md = {
         "dates": dates,
         "amounts": amounts,
         "names": names,
-        "emails": extract_emails(text) if "@" in text else [],
-        "phones": phones,
-        "addresses": addresses,
-        "invoice_numbers": (extract_invoice_numbers(text)
-                            if not gates_sound
-                            or any(g in text_lower
-                                   for g in _INVOICE_GATES) else []),
-        "po_numbers": (extract_po_numbers(text)
-                       if not gates_sound
-                       or any(g in text_lower for g in _PO_GATES) else []),
-        "postal_codes": postal,
-        "tax_ids": tax_ids,
+        "emails": _sorted_unique_matches((_EMAIL_RE,), scan),
+        "phones": _sorted_unique_matches(_PHONE_RES, scan),
+        "addresses": _sorted_unique_matches(_ADDRESS_RES, scan),
+        "invoice_numbers": _sorted_unique_matches(_INVOICE_RES, scan),
+        "po_numbers": _sorted_unique_matches(_PO_RES, scan),
+        "postal_codes": _sorted_unique_matches(_POSTAL_RES, scan),
+        "tax_ids": _sorted_unique_matches(_TAX_RES, scan),
         "date_contexts": date_ctx,
         "amount_labels": amount_labels,
         "name_contexts": name_ctx,

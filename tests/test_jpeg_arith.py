@@ -3,7 +3,7 @@ coder + Annex F/G statistical models (extract/jpeg_arith.py)."""
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from docvault_ocr_service_spark.extract.images import (
@@ -168,6 +168,7 @@ def test_sof10_scan_script_invariance():
 
 @settings(max_examples=25, deadline=None)
 @given(st.integers(0, 2**31 - 1), st.integers(1, 40))
+@example(seed=35805, n_mut=29)  # fill bytes running to the end of data
 def test_decode_sof10_total(seed, n_mut):
     """decode_jpeg on mutated/truncated SOF10 streams stays total:
     only ImageDecodeError/UnsupportedImageError ever escape (the
