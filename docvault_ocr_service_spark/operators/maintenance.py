@@ -5,8 +5,8 @@ set per run; after thousands of incremental runs the scan cost is
 dominated by file-open overhead, not bytes — the classic small-file
 problem Iceberg solves with ``rewrite_data_files``.  This is the
 parquet-store equivalent: read, repartition to ~target-sized files,
-atomic staging swap (same crash contract as the checkpoint store — a
-crash leaves the previous table intact).
+atomic staging swap (``swap_in``, which the checkpoint log's compaction
+uses too — a crash leaves the previous table intact).
 """
 
 from __future__ import annotations
@@ -14,7 +14,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _dir_stats(path: str) -> tuple[int, int]:
@@ -28,13 +28,26 @@ def _dir_stats(path: str) -> tuple[int, int]:
     return n, size
 
 
+def swap_in(df: DataFrame, path: str) -> None:
+    """Replace the table at ``path`` with ``df``: a staging write to
+    ``.compacting``, then two renames through a ``.old`` backup.  A
+    crash at any point leaves a state ``recover_compaction`` mends."""
+    path = path.rstrip("/")
+    staging, backup = path + ".compacting", path + ".old"
+    df.write.mode("overwrite").parquet(staging)
+    if os.path.isdir(path):
+        os.rename(path, backup)
+    os.rename(staging, path)
+    shutil.rmtree(backup, ignore_errors=True)
+
+
 def recover_compaction(path: str) -> None:
-    """Finish a swap a crash interrupted (same contract as the
-    checkpoint store): a ``.old`` beside a MISSING table means the crash
-    hit between the two renames — restore it; beside a live table the
-    new data already committed — drop the stale backup.  Called on
-    compaction entry AND by the results read path, so a crashed
-    compaction can never surface as an empty table."""
+    """Finish a ``swap_in`` a crash interrupted: a ``.old`` beside a
+    MISSING table means the crash hit between the two renames — restore
+    it; beside a live table the new data already committed — drop the
+    stale backup.  Called on compaction entry AND by the results and
+    checkpoint read paths, so a crashed compaction can never surface as
+    an empty table."""
     backup = path.rstrip("/") + ".old"
     if os.path.isdir(backup):
         if not os.path.isdir(path):
@@ -59,13 +72,7 @@ def compact_parquet(spark: SparkSession, path: str,
         return {"files_before": files_before,
                 "files_after": files_before, "bytes": total,
                 "compacted": False}
-    df = spark.read.parquet(path)
-    staging = path.rstrip("/") + ".compacting"
-    df.repartition(n_target).write.mode("overwrite").parquet(staging)
-    backup = path.rstrip("/") + ".old"
-    os.rename(path, backup)
-    os.rename(staging, path)
-    shutil.rmtree(backup)
+    swap_in(spark.read.parquet(path).repartition(n_target), path)
     files_after, _ = _dir_stats(path)
     return {"files_before": files_before, "files_after": files_after,
             "bytes": total, "compacted": True}

@@ -3,8 +3,8 @@
 Spark restatement of the reference's whole service loop (SURVEY §3.1):
 scan → claim (MERGE-checkpoint anti-join) → size-routed salted
 repartition → one ``mapInPandas`` extraction stage, materialized once in
-executor storage → MERGE into results/checkpoint → lineage + metrics
-appends.
+executor storage → results append + checkpoint log append → lineage +
+metrics appends.
 
 Physical shape (why this survives 100×): one input scan, one checkpoint
 scan and one claim anti-join feed ONE routing exchange
@@ -20,12 +20,12 @@ reference, too, extracts a PDF's pages inside one worker
 PDF's time, so splitting its pages would not spread the work that
 counts.  The only aggregations are the tiny lineage/metrics rollups.
 
-The run's output reaches disk once, through the MERGE: the stage is
-persisted and materialized by one ``noop`` write.  A lost cached block
-recomputes against the file listing fixed when the stage was planned:
-the same claim, or a failed run on a bucket file the MERGE swapped away,
-never a re-claim against the new checkpoint.  Runs into one state dir
-must not overlap — the checkpoint swap requires that.
+The run's output reaches disk once, through the results and checkpoint
+appends: the stage is persisted and materialized by one ``noop`` write.
+A lost cached block recomputes against the file listing fixed when the
+stage was planned: the same claim, never a re-claim against the grown
+checkpoint log.  Runs into one state dir must not overlap: two runs
+would claim the same urls and count their attempts twice.
 """
 
 from __future__ import annotations
@@ -133,14 +133,13 @@ def run_extract_job(spark: SparkSession, input_df: DataFrame,
                                           size_threshold))
 
     # Materialize the run's output once, in executor storage; the write
-    # also observes the run's counts and the buckets its urls hash to, so
-    # neither the report nor the MERGE re-scans for them.
+    # also observes the run's counts, so neither the report nor the
+    # appends re-scan for them.
     stage = Observation()
     staged = (extracted.observe(
         stage,
         F.count(F.lit(1)).alias("total"),
-        F.count_if(F.col("status") == "done").alias("done"),
-        F.collect_set(store.bucket_col()).alias("touched"))
+        F.count_if(F.col("status") == "done").alias("done"))
         .persist(StorageLevel.MEMORY_AND_DISK))
     try:
         staged.write.format("noop").mode("overwrite").save()
@@ -155,11 +154,10 @@ def run_extract_job(spark: SparkSession, input_df: DataFrame,
              .parquet(os.path.join(hocr_dir, f"run={run_id}")))
 
         # a run that completed nothing appends no empty results file; one
-        # that claimed nothing also appends no lineage and, with no
-        # touched bucket, runs no MERGE; its metrics row records it
-        store.merge_results(staged, run_id,
-                            touched=sorted(counts["touched"]),
-                            n_done=counts["done"])
+        # that claimed nothing appends no checkpoint or lineage rows
+        # either; its metrics row records it
+        if counts["total"]:
+            store.merge_results(staged, run_id, n_done=counts["done"])
         append_observability(spark, state_dir, staged, run_id,
                              total=counts["total"])
     finally:

@@ -20,12 +20,6 @@ The knobs below are the ones SURVEY §4 flags as *explicit engineering*:
 - ``spark.sql.shuffle.partitions`` sized to cores (at least 8), not the
   200 default — on a real cluster this is set to ~2-3× total cores by
   the submitter (``extra_conf`` overrides it).
-- The parallel-listing threshold is the checkpoint's bucket count, not a
-  machine size: past 32 directories (the default) Spark lists them in a
-  Spark job of one task each, and the checkpoint root holds
-  ``N_BUCKETS`` = 64 bucket directories, so every checkpoint read paid
-  that job.  Listed on the driver instead, ``read_checkpoint()`` of a
-  64-bucket checkpoint dropped from 0.34-0.47 s to 0.03 s (local[4]).
 """
 
 from __future__ import annotations
@@ -33,8 +27,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-from .operators.checkpoint import N_BUCKETS
 
 ARROW_BATCH_ROWS = 10_000
 ARROW_BATCH_BYTES = "16m"
@@ -67,8 +59,6 @@ def get_spark(app_name: str = "docvault_ocr_service_spark",
                 os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "64m")
-        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-                str(N_BUCKETS))
         # keep exactly one Python worker per task slot alive across
         # stages: a fresh fork per stage both pays startup again and
         # briefly doubles the Python process count — on a taskset-pinned

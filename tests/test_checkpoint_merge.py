@@ -1,22 +1,25 @@
-"""The checkpoint MERGE's physical shape and its attempt accounting:
-one exchange, one file per bucket, no write stage wider than the slots,
-checkpoint reads listed on the driver, and no-op reruns that write
-nothing but their metrics row."""
+"""The checkpoint log: runs only add files to it and each run adds
+O(its rows), reads dedup to one row per url and start no Spark job, a
+url with any terminal row is settled, the attempt accounting holds, and
+no-op reruns write nothing but their metrics row."""
 
 import glob
+import hashlib
 import os
 import zlib
 from datetime import datetime, timezone
 
+import pytest
 from pyspark.sql import functions as F
 
 from docvault_ocr_service_spark import corpus
 from docvault_ocr_service_spark.operators.checkpoint import (
-    N_BUCKETS, ParquetCheckpointStore)
+    ParquetCheckpointStore)
 from docvault_ocr_service_spark.plans.extract_job import run_extract_job
 from docvault_ocr_service_spark.schemas import INPUT_SCHEMA, RESULT_SCHEMA
 
 _TAIL = (None,) * (len(RESULT_SCHEMA.fields) - 4)
+N_RUNS, PER_RUN, RETRIES = 9, 30, 6
 
 
 def _results(spark, rows):
@@ -27,14 +30,15 @@ def _results(spark, rows):
         RESULT_SCHEMA)
 
 
+def _input(spark, urls):
+    return spark.createDataFrame(
+        [(u, datetime.now(timezone.utc), None, "x", "en") for u in urls],
+        schema=INPUT_SCHEMA)
+
+
 def _bucket(url):
-    return zlib.crc32(url.encode()) % N_BUCKETS
-
-
-def _all_bucket_urls(n=400):
-    urls = [f"https://merge.example/{i}" for i in range(n)]
-    assert {_bucket(u) for u in urls} == set(range(N_BUCKETS))
-    return urls
+    """The url's bucket in the 64-bucket layout the log replaced."""
+    return zlib.crc32(url.encode()) % 64
 
 
 def _parquet_files(root):
@@ -43,69 +47,75 @@ def _parquet_files(root):
                             recursive=True))
 
 
-def test_merge_is_one_exchange_and_one_file_per_bucket(spark, tmp_path):
-    """A MERGE touching all 64 buckets plans exactly one Exchange (the
-    hash repartition on _b; AQE off so the plan is final), writes from
-    no more tasks than there are slots, and leaves one data file in
-    every bucket directory."""
-    store = ParquetCheckpointStore(spark, str(tmp_path / "state"))
-    urls = _all_bucket_urls()
-    store.merge_results(_results(spark, [(u, "failed_retryable")
-                                         for u in urls]), "r1")
-
-    seen = {}
-    swap = store._swap_buckets
-
-    def capture(df, touched):
-        seen["plan"] = df._jdf.queryExecution().executedPlan().toString()
-        seen["tasks"] = df.rdd.getNumPartitions()
-        seen["touched"] = touched
-        return swap(df, touched)
-
-    store._swap_buckets = capture
-    aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        store.merge_results(_results(spark, [(u, "done") for u in urls]),
-                            "r2")
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
-
-    exchanges = [line.strip(" :+-") for line in seen["plan"].splitlines()
-                 if "Exchange" in line]
-    assert len(exchanges) == 1, seen["plan"]
-    assert exchanges[0].startswith("Exchange hashpartitioning(_b#"), \
-        seen["plan"]
-    assert seen["touched"] == list(range(N_BUCKETS))
-    assert seen["tasks"] == min(N_BUCKETS,
-                                spark.sparkContext.defaultParallelism)
-
-    cp = store.checkpoint_dir
-    per_bucket = {}
-    for f in _parquet_files(cp):
-        per_bucket.setdefault(f.split(os.sep)[0], []).append(f)
-    assert sorted(per_bucket) == sorted(f"_b={k}" for k in range(N_BUCKETS))
-    assert all(len(fs) == 1 for fs in per_bucket.values()), per_bucket
-    rows = store.read_checkpoint()
-    assert rows.columns == ["url", "status", "attempt", "error_kind",
-                            "error_msg", "updated_at", "run_id"]
-    assert {(r["status"], r["attempt"]) for r in rows.collect()} \
-        == {("done", 2)}
+def _files(root):
+    """Every data file under ``root`` and its checksum file: relative
+    path → (sha256, mtime, size).  The ``_SUCCESS`` commit marker, which
+    every append rewrites, holds no rows and is left out."""
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            if "_SUCCESS" in n:
+                continue
+            p = os.path.join(d, n)
+            with open(p, "rb") as f:
+                digest = hashlib.sha256(f.read()).hexdigest()
+            out[os.path.relpath(p, root)] = (digest, os.path.getmtime(p),
+                                             os.path.getsize(p))
+    return out
 
 
-def test_checkpoint_reads_start_no_spark_job(spark, tmp_path):
-    """Reading a 64-bucket checkpoint lists its directories on the
-    driver: neither read_checkpoint() nor claimable() starts a job (a
-    parallel-listing job per read is what the session's listing
-    threshold prevents)."""
-    store = ParquetCheckpointStore(spark, str(tmp_path / "state"))
-    urls = _all_bucket_urls()
-    store.merge_results(_results(spark, [(u, "done") for u in urls]), "r1")
-    assert len(glob.glob(os.path.join(store.checkpoint_dir, "_b=*"))) \
-        == N_BUCKETS
-    inp = spark.createDataFrame(
-        [(u, datetime.now(timezone.utc), None, "x", "en") for u in urls],
-        schema=INPUT_SCHEMA)
+@pytest.fixture(scope="module")
+def grown_log(spark, tmp_path_factory):
+    """A checkpoint log grown by N_RUNS small incremental runs into one
+    state: each adds PER_RUN new urls, RETRIES of them retryable, and
+    retries the previous run's retryable urls, which fail again.  Also
+    the checkpoint's files after each run."""
+    store = ParquetCheckpointStore(
+        spark, str(tmp_path_factory.mktemp("log") / "state"))
+    snaps, retry = [{}], []
+    for i in range(N_RUNS):
+        new = [(f"https://log.example/{i}/{j:02d}",
+                "failed_retryable" if j < RETRIES else "done")
+               for j in range(PER_RUN)]
+        store.merge_results(_results(spark, new + retry), f"r{i}")
+        snaps.append(_files(store.checkpoint_dir))
+        retry = new[:RETRIES]
+    return store, snaps
+
+
+def test_log_runs_only_add_files_of_a_steady_size(spark, grown_log):
+    """No run changes or removes a checkpoint file that existed before
+    it (path, hash, mtime), the bytes a run adds do not grow with the
+    log, and the log reads back as one row per url, the latest."""
+    store, snaps = grown_log
+    added = []
+    for before, after in zip(snaps, snaps[1:]):
+        for path, sig in before.items():
+            assert after.get(path) == sig, f"run rewrote {path}"
+        added.append(sum(after[p][2] for p in set(after) - set(before)
+                         if p.endswith(".parquet")))
+    assert abs(added[-1] - added[1]) <= 0.1 * added[1], added
+    assert len(glob.glob(os.path.join(store.checkpoint_dir, "*.parquet"))) \
+        >= N_RUNS
+
+    rows = store.read_checkpoint().collect()
+    assert len(rows) == len({r["url"] for r in rows}) == N_RUNS * PER_RUN
+    attempts = {}
+    for r in rows:
+        attempts[r["attempt"]] = attempts.get(r["attempt"], 0) + 1
+    assert attempts == {1: N_RUNS * PER_RUN - (N_RUNS - 1) * RETRIES,
+                        2: (N_RUNS - 1) * RETRIES}
+    assert store.claimable(_input(spark, [r["url"] for r in rows])) \
+        .count() == RETRIES * N_RUNS
+
+
+def test_checkpoint_reads_start_no_spark_job(spark, grown_log):
+    """Reading a many-file checkpoint log lists its one directory on the
+    driver: neither read_checkpoint() nor claimable() starts a job."""
+    store, _ = grown_log
+    urls = [f"https://log.example/{i}/{j:02d}"
+            for i in range(N_RUNS) for j in range(RETRIES, PER_RUN)]
+    inp = _input(spark, urls)
 
     sc = spark.sparkContext
     group = "checkpoint-listing-test"
@@ -125,6 +135,41 @@ def test_checkpoint_reads_start_no_spark_job(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     assert after == before
     assert store.claimable(inp).count() == 0
+
+
+def test_any_terminal_row_settles_and_reads_are_stable(spark, tmp_path,
+                                                        layouts):
+    """The claim settles a url with any terminal row: also one a
+    streaming re-crawl took from done to failed_retryable, whose current
+    row is the retryable one.  A url with only retryable rows below
+    MAX_ATTEMPTS stays claimable.  A run whose input holds one url twice
+    reads back as the same single row under every session layout."""
+    store = ParquetCheckpointStore(spark, str(tmp_path / "state"))
+    recrawled = "https://claim.example/recrawled"
+    retrying = "https://claim.example/retrying"
+    twice = "https://claim.example/twice"
+    store.merge_results(_results(spark, [(recrawled, "done"),
+                                         (retrying, "failed_retryable")]),
+                        "r1")
+    store.merge_results(_results(spark, [(recrawled, "failed_retryable")]),
+                        "stream00000001")
+    cur = {r["url"]: r for r in store.read_checkpoint().collect()}
+    assert (cur[recrawled]["status"], cur[recrawled]["attempt"]) \
+        == ("failed_retryable", 2)
+    assert {r["url"] for r in store.claimable(
+        _input(spark, [recrawled, retrying])).collect()} == {retrying}
+
+    dup = [(twice, "failed_retryable", "unexpected", msg) + _TAIL
+           for msg in ("first", "second")]
+    store.merge_results(spark.createDataFrame(dup, RESULT_SCHEMA), "r2")
+    reads = []
+    for _ in layouts():
+        rows = store.read_checkpoint().where(F.col("url") == twice) \
+            .collect()
+        assert len(rows) == 1
+        reads.append(rows[0])
+    assert all(r == reads[0] for r in reads), reads
+    assert reads[0]["attempt"] == 1
 
 
 def test_merge_attempt_accounting(spark, tmp_path):

@@ -1,5 +1,6 @@
 """Crawl-frontier composition + small-file compaction."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from docvault_ocr_service_spark.operators.maintenance import (
@@ -101,34 +102,96 @@ def test_compaction_crash_recovery(spark, tmp_path):
     assert store.read_results().count() == 5
 
 
-def test_checkpoint_flat_layout_migration(spark, tmp_path):
-    """A pre-bucketing (flat) checkpoint dir migrates on first read:
-    rows preserved, bucket dirs created, flat files removed."""
-    import glob
+def _legacy_checkpoint(spark, cp, layout, rows):
+    """Write ``rows`` in a legacy checkpoint layout at ``cp``: ``flat``
+    part files, ``bucketed`` ``_b=K`` dirs from one partitioned write
+    (so every bucket's file has the same name), or ``bucketed_crashed``:
+    that, with one bucket left only at ``_b=K.old`` by a crash between
+    its two renames, a stale ``_b=J.old`` beside a live ``_b=J`` holding
+    a row that must not come back, and a leftover swap staging dir."""
+    import os
+    import shutil
+
+    from docvault_ocr_service_spark.schemas import CHECKPOINT_SCHEMA
+
+    df = spark.createDataFrame(rows, CHECKPOINT_SCHEMA)
+    if layout == "flat":
+        df.coalesce(2).write.parquet(cp)
+        return
+    (df.withColumn("_b", F.pmod(F.crc32(F.col("url").cast("binary")),
+                                F.lit(64)))
+     .repartition(1).write.partitionBy("_b").parquet(cp))
+    buckets = sorted(d for d in os.listdir(cp) if d.startswith("_b="))
+    names = [n for b in buckets for n in os.listdir(os.path.join(cp, b))
+             if n.endswith(".parquet")]
+    assert len(set(names)) == 1 < len(names)
+    if layout == "bucketed_crashed":
+        os.rename(os.path.join(cp, buckets[0]),
+                  os.path.join(cp, buckets[0] + ".old"))
+        stale = os.path.join(cp, buckets[1] + ".old")
+        spark.createDataFrame([("https://x.example/stale", "done") +
+                               rows[0][2:]], CHECKPOINT_SCHEMA) \
+            .coalesce(1).write.parquet(stale)
+        shutil.copytree(stale, os.path.join(cp + ".staging", buckets[2]))
+
+
+@pytest.mark.parametrize("layout", ["flat", "bucketed", "bucketed_crashed"])
+def test_checkpoint_legacy_layout_reads_as_a_log(spark, tmp_path, layout):
+    """A legacy checkpoint reads as the log with no row lost and claims
+    the same set.  A bucketed one migrates on first read by renames
+    alone, starting no Spark job, and leaves no ``_b=*``, ``.old`` or
+    staging dir; a second read changes nothing."""
     import os
     from datetime import datetime, timezone
 
     from docvault_ocr_service_spark.operators.checkpoint import (
         ParquetCheckpointStore)
-    from docvault_ocr_service_spark.schemas import CHECKPOINT_SCHEMA
+    from docvault_ocr_service_spark.schemas import INPUT_SCHEMA
 
     state = str(tmp_path / "legacy")
-    os.makedirs(os.path.join(state, "checkpoint"))
+    cp = os.path.join(state, "checkpoint")
     now = datetime.now(timezone.utc)
-    rows = [(f"https://x.example/{i}", "done", 1, None, None, now, "r0")
-            for i in range(30)]
-    # write the OLD flat layout directly at the checkpoint root
-    spark.createDataFrame(rows, CHECKPOINT_SCHEMA).coalesce(2) \
-        .write.mode("overwrite").parquet(os.path.join(state, "checkpoint"))
-    assert glob.glob(os.path.join(state, "checkpoint", "*.parquet"))
+    statuses = ("done", "failed_permanent", "failed_retryable")
+    rows = [(f"https://x.example/{i}", statuses[i % 3], 1 + i % 2,
+             None, None, now, "r0") for i in range(30)]
+    _legacy_checkpoint(spark, cp, layout, rows)
 
     store = ParquetCheckpointStore(spark, state)
-    cp = store.read_checkpoint()
-    assert cp.count() == 30                       # nothing lost
-    assert not glob.glob(os.path.join(state, "checkpoint", "*.parquet"))
-    assert glob.glob(os.path.join(state, "checkpoint", "_b=*"))
-    # settled urls stay settled after migration
-    from docvault_ocr_service_spark.schemas import INPUT_SCHEMA
+    sc = spark.sparkContext
+    group = f"legacy-{layout}"
+
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+        return set(sc.statusTracker().getJobIdsForGroup(group))
+
+    sc.setJobGroup(group, "legacy checkpoint read")
+    try:
+        before = jobs()
+        cur = store.read_checkpoint()
+        assert jobs() == before
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    def key(r):
+        return (r[0], r[1], r[2], r[3], r[4], r[6])
+
+    assert sorted(map(key, cur.collect())) == sorted(map(key, rows))
+    new = [f"https://x.example/new{i}" for i in range(3)]
     inp = spark.createDataFrame(
-        [(u, now, None, "x", "en") for u, *_ in rows], schema=INPUT_SCHEMA)
-    assert store.claimable(inp).count() == 0
+        [(u, now, None, "x", "en")
+         for u in [r[0] for r in rows] + new + ["https://x.example/stale"]],
+        schema=INPUT_SCHEMA)
+    want = {r[0] for r in rows if r[1] == "failed_retryable"} | set(new) \
+        | {"https://x.example/stale"}
+    assert {r["url"] for r in store.claimable(inp).collect()} == want
+
+    def listing():
+        return sorted(os.path.relpath(os.path.join(d, n), state)
+                      for d, _, ns in os.walk(state) for n in ns)
+
+    assert sorted(os.listdir(state)) == ["checkpoint"]
+    assert not [d for d in os.listdir(cp) if d.startswith("_b=")]
+    first = listing()
+    assert store.read_checkpoint().count() == len(rows)
+    assert listing() == first

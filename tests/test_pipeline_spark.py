@@ -138,8 +138,8 @@ def test_skew_routing_partitions(spark, input_df):
 
 
 def test_interrupted_swap_recovers(spark, input_df, tmp_path):
-    """Crash between the two renames of the checkpoint swap must not
-    lose the table: read path restores the .old backup."""
+    """Crash between the two renames of the checkpoint's compaction swap
+    must not lose the table: read path restores the .old backup."""
     import os
     import shutil as sh
 
@@ -152,7 +152,7 @@ def test_interrupted_swap_recovers(spark, input_df, tmp_path):
     os.rename(cp, cp + ".old")  # simulate crash mid-swap
     assert store.read_checkpoint().count() == n  # recovered
 
-    # stale backup alongside a live table must not break the next swap;
+    # stale backup alongside a live table must not break the next append;
     # the run's staged output is gone, so its done rows are re-merged
     # from the results table
     sh.copytree(cp, cp + ".old")
@@ -161,85 +161,10 @@ def test_interrupted_swap_recovers(spark, input_df, tmp_path):
     assert store.read_checkpoint().count() == n
 
 
-def test_incremental_merge_leaves_untouched_buckets_byte_identical(
-        spark, tmp_path):
-    """The bucketed MERGE contract: a run whose urls hash into bucket set
-    B rewrites exactly B — every other bucket's files stay byte-identical
-    (content and mtime), the property that bounds per-run MERGE cost at
-    10^12 checkpoint rows."""
-    import hashlib
-    import os
-    import zlib
-
-    state = str(tmp_path / "incr")
-    store = ParquetCheckpointStore(spark, state)
-
-    schema = ("url string, status string, error_kind string, "
-              "error_msg string, text string, confidence double, "
-              "page_count int, pages array<struct<page:int,text:string,"
-              "confidence:double,source:string>>, "
-              "spans array<struct<seq:int,tag:string,start:int,"
-              "end:int,link_density:double>>, "
-              "metadata struct<confidence:double>, category string, "
-              "category_confidence double, "
-              "detected_languages array<string>, lang string, "
-              "source string, processing_time double, partition_id int")
-
-    def results_for(urls):
-        rows = [(u, "done", None, None, "t", 95.0, 1,
-                 [], [], None, None, None, [], "en", "native", 0.0, 0)
-                for u in urls]
-        return spark.createDataFrame(rows, schema=schema)
-
-    def bucket(u):
-        return zlib.crc32(u.encode()) % store.n_buckets
-
-    # two url sets landing in disjoint bucket sets
-    pool = [f"https://x.example/{i}" for i in range(400)]
-    set_a = [u for u in pool if bucket(u) < 20][:40]
-    set_b = [u for u in pool if bucket(u) >= 40][:40]
-    assert set_a and set_b
-
-    store.merge_results(results_for(set_a), "runA")
-
-    def snapshot():
-        out = {}
-        cp = os.path.join(state, "checkpoint")
-        for d in sorted(os.listdir(cp)):
-            full = os.path.join(cp, d)
-            for f in sorted(os.listdir(full)):
-                p = os.path.join(full, f)
-                h = hashlib.sha256(open(p, "rb").read()).hexdigest()
-                out[f"{d}/{f}"] = (h, os.path.getmtime(p))
-        return out
-
-    before = snapshot()
-    a_buckets = {f"_b={bucket(u)}" for u in set_a}
-    assert set(d.split("/")[0] for d in before) == a_buckets
-
-    store.merge_results(results_for(set_b), "runB")
-    after = snapshot()
-
-    # every file of set A's buckets is untouched: same path, hash, mtime
-    for path, sig in before.items():
-        assert after[path] == sig, f"untouched bucket file rewritten: {path}"
-    # set B's buckets appeared, and nothing else
-    b_buckets = {f"_b={bucket(u)}" for u in set_b}
-    assert set(d.split("/")[0] for d in after) == a_buckets | b_buckets
-
-    # spark-side bucket column agrees with the python crc32 predictor
-    cp_rows = store.read_checkpoint().count()
-    assert cp_rows == len(set_a) + len(set_b)
-    assert store.claimable(
-        spark.createDataFrame(
-            [(u, datetime.now(timezone.utc), None, "x", "en")
-             for u in set_a + set_b], schema=INPUT_SCHEMA)).count() == 0
-
-
 def test_null_url_rows_dropped_not_fatal(spark, tmp_path):
-    """A null url has no bucket (null crc32): it must be dropped at
-    merge time instead of poisoning the sorted() over bucket ids and
-    failing the whole run."""
+    """A null url can never be claimed or read back by url: it must be
+    dropped at merge time instead of failing the whole run or landing
+    in either table."""
     state = str(tmp_path / "nullurl")
     store = ParquetCheckpointStore(spark, state)
     schema = ("url string, status string, error_kind string, "
